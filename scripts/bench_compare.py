@@ -291,7 +291,7 @@ def main():
     a(f"## Sub-second job-floor tail (>2× nominal, ≤1 s spark, <0.5 s duckdb) — {len(floor)} queries")
     a("")
     a("Measures Spark's per-query job floor against DuckDB in-process")
-    a("times; plans are exchange-minimal (docs/PLANS.md shape audit) and")
+    a("times; plans are exchange-minimal (docs/plan_shapes.tsv shape audit) and")
     a("sf0.1→sf10 growth sub-linear (docs/BENCH_SF10.md), so not graded weak:")
     a("")
     a(", ".join(f"`{k}`" for k in floor) or "(none)")

@@ -126,8 +126,8 @@ object Bench {
     val unpersistPerQuery =
       sys.env.get("SPARK_GRAFT_BENCH_UNPERSIST").exists(_ == "1")
     // COLD-HONEST default (r13 verdict task 1): every PlanCache handle
-    // (shared fixture persists/checkpoints, and through its onClear
-    // hooks the arms memo and the driver-side model Memo) is dropped
+    // (shared fixture persists/checkpoints and the session's memos of
+    // fitted models and ranked arms) is dropped
     // after EVERY timed pass — so each measured pass computes from the
     // parquet inputs, and the min-of-N is a steady-state-JVM COLD-DATA
     // number, symmetric with DuckDB re-executing every pass in full.

@@ -77,13 +77,14 @@ final case class GtfsFeed(spark: SparkSession, tables: Map[String, DataFrame]) {
       .join(stopTimes.select(col("stop_id")), Seq("stop_id"), "left_semi")
     val stations0 = stops0.filter(lt === "1")
     val otherStops = stops0.filter(!lt.isin("", "0", "1"))
-    // One distinct pass over the surviving parent_station column
-    // feeds BOTH the child-id set and the any-null flag (the flag is
-    // an O(#stations) agg over the distinct result, not a second
-    // scan of the stops table).
+    // One distinct over the surviving parent_station column feeds
+    // BOTH the child-id set and the any-null flag (the flag is an
+    // O(#stations) agg over the distinct result, not a second scan of
+    // the stops table). Not persisted: nothing could release it, since
+    // the returned feed's plans read it, and on gtfs-feed-ops a
+    // persist held ~70 MB more per cycle for no CPU saved.
     val parentDistinct = plainKept.unionByName(stations0).unionByName(otherStops)
       .select(col("parent_station")).distinct()
-      .persist()
     val childIds = parentDistinct
       .filter(col("parent_station").isNotNull)
       .select(col("parent_station").as("stop_id"))

@@ -92,14 +92,16 @@ object BitextMining {
     // (bench passes, the margin sweep pattern) re-enters at two
     // one-line LogicalRDD scans instead of re-running the quadratic
     // aggregation (the AnnQueries hybrid-arm device)
-    val fwd = graft.util.PlanCache.checkpointShared(scored.groupBy(col("s_id"))
+    val fwd = scored.groupBy(col("s_id"))
       .agg(graft.plans.TopKAgg.topK(col("cm"), col("t_id"), k).as("top"))
       .select(col("s_id").as("src_id"), explode(col("top")).as("e"))
-      .select(col("src_id"), col("e.id").as("tgt_id"), col("e.score").as("cm")))
-    val bwd = graft.util.PlanCache.checkpointShared(scored.groupBy(col("t_id"))
+      .select(col("src_id"), col("e.id").as("tgt_id"), col("e.score").as("cm"))
+      .sharedCheckpoint()
+    val bwd = scored.groupBy(col("t_id"))
       .agg(graft.plans.TopKAgg.topK(col("cm"), col("s_id"), k).as("top"))
       .select(col("t_id").as("tgt_id"), explode(col("top")).as("e"))
-      .select(col("tgt_id"), col("e.id").as("src_id"), col("e.score").as("cm")))
+      .select(col("tgt_id"), col("e.id").as("src_id"), col("e.score").as("cm"))
+      .sharedCheckpoint()
     marginTail(fwd, bwd, k, marginMilli)
   }
 
@@ -157,14 +159,14 @@ object BitextMining {
     // per call and never hits across bench passes — each pass re-ran
     // the checkpoint jobs and the bucket join. With a stable identity,
     // repeat invocations re-enter at cached frames.
-    val srcB = graft.util.PlanCache.checkpointShared(
-      src.select(srcId.cast("bigint").as("src_id"),
-        srcVec.cast("array<double>").as("v_s"),
-        Similarity.lshBucket(srcVec.cast("array<double>"), planes).as("bucket")))
-    val tgtB = graft.util.PlanCache.checkpointShared(
-      tgt.select(tgtId.cast("bigint").as("tgt_id"),
-        tgtVec.cast("array<double>").as("v_t"),
-        Similarity.lshBucket(tgtVec.cast("array<double>"), planes).as("bucket")))
+    val srcB = src.select(srcId.cast("bigint").as("src_id"),
+      srcVec.cast("array<double>").as("v_s"),
+      Similarity.lshBucket(srcVec.cast("array<double>"), planes).as("bucket"))
+      .sharedCheckpoint()
+    val tgtB = tgt.select(tgtId.cast("bigint").as("tgt_id"),
+      tgtVec.cast("array<double>").as("v_t"),
+      Similarity.lshBucket(tgtVec.cast("array<double>"), planes).as("bucket"))
+      .sharedCheckpoint()
 
     // one cosine per candidate pair, quantized immediately: BOTH
     // direction rankings run in (micro-cos DESC, id ASC) order
@@ -187,7 +189,7 @@ object BitextMining {
     // plus a 3-stage aggregate; a lazy guard would have to persist an
     // unguarded O(n²) candidate frame first, which is the exact
     // failure the guard exists to prevent. (2) srcB/tgtB are
-    // corpus-sized, an explicit exception to checkpointShared's
+    // corpus-sized, an explicit exception to sharedCheckpoint's
     // ROW-BOUNDED-BY-CONSTRUCTION preference: each is one projected
     // row per input vector (never the pair blowup), both are read
     // three times here (join + two histograms), and their blocks drop

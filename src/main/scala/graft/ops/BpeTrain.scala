@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.PlanCache
+import graft.util.PlanCache.Shareable
+
 /** Distributed BPE tokenizer training (C75): learn the first `n`
   * merge rules over a corpus — the full iterative loop whose single
   * inner statistic [[BpePairs]] (C40) scores. Classic Sennrich BPE on
@@ -53,8 +56,6 @@ object BpeTrain {
     */
   def fit(df: DataFrame, text: Column, nMerges: Int): (DataFrame, DataFrame) = {
     require(nMerges >= 1, s"need at least one merge, got $nMerges")
-    val spark = df.sparkSession
-    fitMemo.keys.filter(_._1.sparkContext.isStopped).foreach(fitMemo.remove)
     // memo key: the canonicalized TEXT-STREAM plan + merge budget —
     // q_bpe_train, q_bpe_encode and q_bpe_fertility all train the
     // same tokenizer over the same corpus, and the r12 bench paid
@@ -64,89 +65,68 @@ object BpeTrain {
     // lifetime; a caller over a mutating corpus gets a new plan
     // identity and therefore a fresh fit.
     val probe = df.select(text.cast("string").as("t"))
-    val key = (spark,
-      (probe.schema, probe.queryExecution.analyzed.canonicalized): Any,
-      nMerges)
-    fitMemo.getOrElseUpdate(key, fitUncached(df, text, nMerges))
+    PlanCache.memo(df.sparkSession,
+      ("bpe", probe.schema, probe.queryExecution.analyzed.canonicalized, nMerges))(
+      fitUncached(df, text, nMerges))
   }
-
-  private val fitMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Any, Int), (DataFrame, DataFrame)]
-
-  // the memoized vocab is a localCheckpoint: a PlanCache.clear sweep
-  // (bench per-query unpersist mode, verify teardown) is the session's
-  // cache-ownership boundary — drop the memo with it so the reference
-  // doesn't pin checkpoint blocks past that point (ContextCleaner
-  // reclaims them once unreferenced)
-  graft.util.PlanCache.onClear(s =>
-    fitMemo.keys.filter(_._1 eq s).foreach(fitMemo.remove))
 
   private def fitUncached(df: DataFrame, text: Column,
       nMerges: Int): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     import spark.implicits._
 
-    // `base` keeps the handle the persist is registered on: `words`
-    // is reassigned every merge round, so unpersisting through it (or
-    // a derived `prev`) is a silent no-op and the vocab cache entry
-    // leaks one copy per fit — the source of the residual
-    // "already cached" warnings in the r9/r10 bench tails
-    val base = df
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    val vocab = PlanCache.scoped(df
       .select(explode(split(trim(lower(text)), "\\s+")).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
       .select(col("word"), col("wc"),
-        regexp_replace(col("word"), "(.)", s"$Sep$$1$Sep").as("rep"))
-      .persist()
-    base.count()
-    var words = base
-
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    var prevCk: DataFrame = null
-    while (rank <= nMerges && !exhausted) {
-      val toks = words.select(col("wc"),
-        split(trim(col("rep"), Sep), s"$Sep$Sep").as("toks"))
-        // fully-merged single-symbol words carry no pairs — and MUST
-        // drop before the index sequence: Spark's sequence(1, 0) is
-        // DESCENDING [1, 0], not empty (DuckDB's range(1, 1) is)
-        .filter(size(col("toks")) >= 2)
-      val best = toks
-        .select(col("wc"), explode(transform(
-          sequence(lit(1), size(col("toks")) - 1),
-          i => struct(element_at(col("toks"), i).as("lhs"),
-            element_at(col("toks"), i + 1).as("rhs")))).as("p"))
-        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-        .agg(sum(col("wc")).as("n_total"))
-        .orderBy(col("n_total").desc, col("lhs"), col("rhs"))
-        .limit(1) // TakeOrderedAndProject: a 1-row driver decision
-        .collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, n) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((rank, l, r, n))
-        words = words
-          .withColumn("rep", call_function("replace", col("rep"),
-            lit(s"$Sep$l$Sep$Sep$r$Sep"), lit(s"$Sep$l$r$Sep")))
-        if (rank % 4 == 0) {
-          // eager checkpoint: once materialized, the PREVIOUS
-          // checkpoint's blocks are dead weight — free them through
-          // the RDD handle (Dataset.unpersist consults only the
-          // CacheManager, which has no entry for RDD-level checkpoint
-          // persistence, so it would be a silent no-op here).
-          words = words.localCheckpoint()
-          if (prevCk != null) graft.util.PlanCache.free(prevCk)
-          prevCk = words
+        regexp_replace(col("word"), "(.)", s"$Sep$$1$Sep").as("rep"))) { base =>
+      base.count()
+      var words = base
+      var rank = 1
+      var exhausted = false
+      var prevCk: DataFrame = null
+      while (rank <= nMerges && !exhausted) {
+        val toks = words.select(col("wc"),
+          split(trim(col("rep"), Sep), s"$Sep$Sep").as("toks"))
+          // fully-merged single-symbol words carry no pairs — and MUST
+          // drop before the index sequence: Spark's sequence(1, 0) is
+          // DESCENDING [1, 0], not empty (DuckDB's range(1, 1) is)
+          .filter(size(col("toks")) >= 2)
+        val best = toks
+          .select(col("wc"), explode(transform(
+            sequence(lit(1), size(col("toks")) - 1),
+            i => struct(element_at(col("toks"), i).as("lhs"),
+              element_at(col("toks"), i + 1).as("rhs")))).as("p"))
+          .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
+          .agg(sum(col("wc")).as("n_total"))
+          .orderBy(col("n_total").desc, col("lhs"), col("rhs"))
+          .limit(1) // TakeOrderedAndProject: a 1-row driver decision
+          .collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val (l, r, n) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((rank, l, r, n))
+          words = words
+            .withColumn("rep", call_function("replace", col("rep"),
+              lit(s"$Sep$l$Sep$Sep$r$Sep"), lit(s"$Sep$l$r$Sep")))
+          if (rank % 4 == 0) {
+            // eager checkpoint: once materialized, the previous
+            // checkpoint is dead weight
+            words = words.localCheckpoint()
+            if (prevCk != null) PlanCache.free(prevCk)
+            prevCk = words
+          }
+          rank += 1
         }
-        rank += 1
       }
+      // pin the encoded vocabulary; the training base releases with
+      // the scope
+      val vocab = words.sharedCheckpoint()
+      if (prevCk != null) PlanCache.free(prevCk)
+      vocab
     }
-    // pin the encoded vocabulary, then release the training base and
-    // the last intermediate checkpoint
-    val vocab = words.localCheckpoint(true)
-    if (prevCk != null) graft.util.PlanCache.free(prevCk)
-    base.unpersist()
     val mergesDf = merges.toSeq.toDF("merge_rank", "lhs", "rhs", "n_total")
       .select(col("merge_rank").cast("bigint").as("merge_rank"),
         col("lhs"), col("rhs"), col("n_total"))

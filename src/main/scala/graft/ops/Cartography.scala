@@ -2,9 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.util.PlanCache.Shareable
+import graft.util.PlanCache
 
 /** Dataset cartography (C139) — per-example training dynamics over
   * the C99 batch perceptron's epoch trajectory (the Swayamdipta et
@@ -47,15 +46,13 @@ object Cartography {
   def trajectory(features: DataFrame, labels: DataFrame, dim: Int,
       epochs: Int): Seq[(Array[Long], Long)] = {
     require(dim > 0 && epochs > 0, "dim and epochs must be positive")
-    val feats = features
-      .join(labels, Seq("doc_id"))
-      .select(col("doc_id"), col("bucket"), col("cnt").cast("long").as("cnt"),
-        col("y").cast("long").as("y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val w = Array.fill(dim)(0L)
     var bias = 0L
     val snaps = Seq.newBuilder[(Array[Long], Long)]
-    try {
+    PlanCache.scoped(features
+      .join(labels, Seq("doc_id"))
+      .select(col("doc_id"), col("bucket"), col("cnt").cast("long").as("cnt"),
+        col("y").cast("long").as("y"))) { feats =>
       for (_ <- 1 to epochs) {
         snaps += ((w.clone(), bias))
         val wLit = lit(w)
@@ -63,10 +60,8 @@ object Cartography {
           .groupBy(col("doc_id"), col("y"))
           .agg(sum(element_at(wLit, (col("bucket") + 1).cast("int")) * col("cnt")).as("dot"))
           .select(col("doc_id"), col("y"), (col("dot") + bias).as("margin"))
-        val mis = margins.filter(col("y") * col("margin") <= 0)
-          .select(col("doc_id"), col("y"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        PlanCache.scoped(margins.filter(col("y") * col("margin") <= 0)
+          .select(col("doc_id"), col("y"))) { mis =>
           val upd = feats
             .join(mis.select(col("doc_id")), Seq("doc_id"), "left_semi")
             .groupBy(col("bucket"))
@@ -80,9 +75,9 @@ object Cartography {
               case b => w(b.toInt) += r.getLong(1)
             }
           }
-        } finally mis.unpersist()
+        }
       }
-    } finally feats.unpersist()
+    }
     snaps.result()
   }
 
@@ -96,14 +91,12 @@ object Cartography {
   def trajectoryText(df: DataFrame, id: Column, text: Column, y: Column,
       dim: Int, epochs: Int): Seq[(Array[Long], Long)] = {
     require(dim > 0 && epochs > 0, "dim and epochs must be positive")
-    val entries = LinearClassifier.entryFrame(df, id, text, y, dim)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val w = Array.fill(dim)(0L)
     var bias = 0L
     val snaps = Seq.newBuilder[(Array[Long], Long)]
     val sentinel = array(struct(lit(-1L).as("bucket"), lit(1L).as("cnt")))
       .cast(graft.plans.HashedBowOps.schema)
-    try {
+    PlanCache.scoped(LinearClassifier.entryFrame(df, id, text, y, dim)) { entries =>
       for (_ <- 1 to epochs) {
         snaps += ((w.clone(), bias))
         val mis = entries.filter(
@@ -121,7 +114,7 @@ object Cartography {
           }
         }
       }
-    } finally entries.unpersist()
+    }
     snaps.result()
   }
 

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.PlanCache
+
 /** Cross-validated label-noise audit (confident-learning style): the
   * labels a pretraining pipeline trains its gates on are themselves
   * scraped — fit the C99 classifier k times, each fold scored by a
@@ -48,16 +50,14 @@ object CrossVal {
     // join + doc-keyed score exchange are gone (guide §2.4). `y`
     // rides twice: cast long for the fit ("y"), original-typed for
     // the audit output ("y_out").
-    val entries = LinearClassifier.entryFrame(docs, id, text, lit(0L), dim)
+    PlanCache.scoped(LinearClassifier.entryFrame(docs, id, text, lit(0L), dim)
       .drop("y")
       .join(labels.select(col("doc_id").cast("bigint").as("doc_id"), col("y")),
         Seq("doc_id"))
       .select(col("doc_id"), col("y").as("y_out"),
         col("y").cast("long").as("y"), col("es"),
         (Dedup.md5Hash60(concat(lit(seed + ":"), col("doc_id").cast("string")))
-          % k).cast("int").as("fold"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+          % k).cast("int").as("fold"))) { entries =>
       // FUSED k fold fits (LinearClassifier.fitArmsEntries): every
       // fold model updates from ONE flagged pass + ONE gradient
       // collect per epoch — k·epochs sequential actions become
@@ -74,7 +74,7 @@ object CrossVal {
             col("margin"), col("pred"))
       }.reduce(_.unionAll(_))
         .withColumn("suspect", col("pred") =!= col("y"))
-    } finally entries.unpersist()
+    }
   }
 
   /** DuckDB twin: k prefixed unrolled-fit chains over fold-filtered

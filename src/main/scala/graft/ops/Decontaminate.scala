@@ -163,11 +163,11 @@ object Decontaminate {
     val t = train.select(trainId.cast("bigint").as("train_id"),
       trainVec.cast("array<double>").as("v_t"),
       SemanticDedup.cellOf(trainVec, anchorSeq).as("cell"))
-      .localCheckpoint(true)
+      .sharedCheckpoint()
     val e = eval.select(evalId.cast("bigint").as("eval_id"),
       evalVec.cast("array<double>").as("v_e"),
       SemanticDedup.cellOf(evalVec, anchorSeq).as("cell"))
-      .localCheckpoint(true)
+      .sharedCheckpoint()
     t.join(broadcast(e), Seq("cell"))
       .withColumn("cos_sim",
         graft.functions.VectorFunctions.cosineSimilarity(col("v_t"), col("v_e")))

@@ -3,7 +3,6 @@ package graft.ops
 import graft.util.PlanCache.Shareable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions
 

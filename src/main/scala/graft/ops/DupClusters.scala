@@ -3,7 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.PlanCache
+import graft.util.PlanCache.Shareable
 
 /** Duplicate-cluster resolution: near-dup detectors (C2-C5) emit
   * PAIRS, but a pipeline must keep one document per duplicate GROUP —
@@ -37,60 +39,55 @@ object DupClusters {
     // THAT (the LabelProp device): the cached hash partitioning
     // satisfies every iteration's join requirement, so rounds shuffle
     // only the (id, label) pairs — not the edge list again each round.
-    val edges = pairs.select(col("id_a").cast("bigint").as("src"), col("id_b").cast("bigint").as("dst"))
+    PlanCache.scoped(pairs.select(col("id_a").cast("bigint").as("src"), col("id_b").cast("bigint").as("dst"))
       .union(pairs.select(col("id_b").cast("bigint").as("src"), col("id_a").cast("bigint").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src"))) { edges =>
+      // localCheckpoint per iteration: an iterative self-referencing
+      // plan otherwise grows its lineage exponentially (the classic
+      // iterative-DataFrame trap — planning itself OOMs after ~10
+      // rounds). On a cluster, use a reliable checkpoint dir instead.
+      // `labelsCk` is this round's checkpoint root, freed once the next
+      // round's is materialized.
+      var labels = edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))
+        .localCheckpoint(true)
+      var labelsCk = labels
 
-    // localCheckpoint per iteration: an iterative self-referencing
-    // plan otherwise grows its lineage exponentially (the classic
-    // iterative-DataFrame trap — planning itself OOMs after ~10
-    // rounds). On a cluster, use a reliable checkpoint dir instead.
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    // the checkpoint ROOT frame backing `labels` this round — freed
-    // (via the RDD handle; a bare unpersist no-ops on checkpointed
-    // frames) once the NEXT round's checkpoint is materialized, so
-    // round blocks don't accumulate for the session's lifetime
-    var labelsCk = labels
-
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // labels flowing across edges: dst receives src's current label
-      val incoming = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("label"),
-          lit(null).cast("bigint").as("old_label"))
-      // The old label rides the SAME union + groupBy that computes the
-      // new one (every id has exactly one labels row, so max over the
-      // null-padded branch recovers it) — the separate next⋈labels
-      // convergence join this loop used to pay per iteration is gone;
-      // min-label propagation only ever decreases a label, so
-      // "changed" is exactly "label < old_label".
-      // LAZY checkpoint: the convergence count below is the first
-      // action over `next`, so it materializes the checkpoint as a
-      // side effect — an eager checkpoint would run the same plan
-      // twice per iteration.
-      val next = labels.select(col("id"), col("label"), col("label").as("old_label"))
-        .union(incoming)
-        .groupBy(col("id"))
-        .agg(min(col("label")).as("label"), max(col("old_label")).as("old_label"))
-        .localCheckpoint(false)
-      val changed = next.filter(col("label") < col("old_label"))
-        .count() // O(1) result; the only driver-side value per iteration
-      // `next` is materialized by the count above — the replaced
-      // round's checkpoint can free now (never the converged one,
-      // which the returned frame reads)
-      graft.util.PlanCache.free(labelsCk)
-      labelsCk = next
-      labels = next.select(col("id"), col("label"))
-      converged = changed == 0
-      iter += 1
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        // labels flowing across edges: dst receives src's current label
+        val incoming = edges
+          .join(labels.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id"), col("label"),
+            lit(null).cast("bigint").as("old_label"))
+        // The old label rides the SAME union + groupBy that computes the
+        // new one (every id has exactly one labels row, so max over the
+        // null-padded branch recovers it) — the separate next⋈labels
+        // convergence join this loop used to pay per iteration is gone;
+        // min-label propagation only ever decreases a label, so
+        // "changed" is exactly "label < old_label".
+        // LAZY checkpoint: the convergence count below is the first
+        // action over `next`, so it materializes the checkpoint as a
+        // side effect — an eager checkpoint would run the same plan
+        // twice per iteration.
+        val next = labels.select(col("id"), col("label"), col("label").as("old_label"))
+          .union(incoming)
+          .groupBy(col("id"))
+          .agg(min(col("label")).as("label"), max(col("old_label")).as("old_label"))
+          .localCheckpoint(false)
+        val changed = next.filter(col("label") < col("old_label"))
+          .count() // O(1) result; the only driver-side value per iteration
+        // `next` is materialized by the count above; the returned frame
+        // reads only the converged round
+        PlanCache.free(labelsCk)
+        labelsCk = next
+        labels = next.select(col("id"), col("label"))
+        converged = changed == 0
+        iter += 1
+      }
+      labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
     }
-    edges.unpersist()
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** One canonical row per duplicate group: the member with the
@@ -129,7 +126,7 @@ object DupClusters {
     // which must come back as its own singleton cluster
     val allNodes = raw.select(col("a").as("id"))
       .union(raw.select(col("b").as("id"))).distinct()
-      .localCheckpoint(true)
+      .sharedCheckpoint()
     // canonical (hi, lo) direction
     var edges = raw
       .filter(col("a") =!= col("b"))
@@ -183,11 +180,9 @@ object DupClusters {
       // count equality is the cheap necessary condition; the exact
       // set comparison (one anti-join job) runs only when counts tie
       val changed = nNew != nOld || ss.except(edges).limit(1).count() > 0
-      // the replaced round's checkpoint blocks free through the RDD
-      // handle (bare unpersist no-ops on checkpointed frames) — after
-      // the except above, which still reads the old edge set; the
-      // final groupBy reads `ss` either way, so the old frame is dead
-      graft.util.PlanCache.free(edges)
+      // after the except above, which still reads the old edge set;
+      // the final groupBy reads `ss` either way
+      PlanCache.free(edges)
       edges = ss
       nOld = nNew
       converged = !changed

@@ -3,7 +3,6 @@ package graft.ops
 import graft.util.PlanCache.Shareable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-span detection — the substring-level view of corpus
   * duplication (the signal behind "dedup at the span level, not the

@@ -55,18 +55,18 @@ object HeapsFit {
     // per-term first occurrence -> its checkpoint bucket; <= nCp rows
     // once bucketed, so the histogram is a shared checkpoint and a
     // repeat fit compiles against a one-line scan
-    val termFirst = graft.util.PlanCache.checkpointShared(
-      toks.groupBy(col("w")).agg(min(col("doc_id")).as("first_doc"))
-        .crossJoin(broadcast(span))
-        .select(bucketOf(col("first_doc")).as("cp"))
-        .groupBy(col("cp")).agg(count(lit(1)).as("nv")))
+    val termFirst = toks.groupBy(col("w")).agg(min(col("doc_id")).as("first_doc"))
+      .crossJoin(broadcast(span))
+      .select(bucketOf(col("first_doc")).as("cp"))
+      .groupBy(col("cp")).agg(count(lit(1)).as("nv"))
+      .sharedCheckpoint()
 
     // per-doc token count -> its checkpoint bucket
-    val docToks = graft.util.PlanCache.checkpointShared(
-      toks.groupBy(col("doc_id")).agg(count(lit(1)).as("nt"))
-        .crossJoin(broadcast(span))
-        .select(bucketOf(col("doc_id")).as("cp"), col("nt"))
-        .groupBy(col("cp")).agg(sum(col("nt")).as("ntok")))
+    val docToks = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("nt"))
+      .crossJoin(broadcast(span))
+      .select(bucketOf(col("doc_id")).as("cp"), col("nt"))
+      .groupBy(col("cp")).agg(sum(col("nt")).as("ntok"))
+      .sharedCheckpoint()
 
     // cumulative over <= nCp histogram rows: bounded-row joins
     val cps = df.sparkSession.range(1, nCp + 1L).select(col("id").as("c"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.util.PlanCache
 
 /** IVF (inverted-file) ANN index: k-means coarse quantizer + cell
   * assignment. Queries probe only the nProbe nearest cells —
@@ -113,52 +114,50 @@ object IvfIndex {
     val spark = corpus.sparkSession
     import spark.implicits._
     val target = math.max(k, k * maxSamplePerCentroid)
-    val sample = corpus
+    PlanCache.scoped(corpus
       .select(id.cast("bigint").as("vid"), vec.cast("array<double>").as("v"))
       .orderBy(xxhash64(col("vid")), col("vid"))
       .limit(target)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist()
-
-    var centroids: Array[Array[Double]] = sample
-      .orderBy(xxhash64(col("vid")), col("vid"))
-      .limit(k)
-      .select(col("v")).as[Seq[Double]].collect().map(_.toArray)
-    if (centroids.isEmpty) { sample.unpersist(); return Model(Array.empty) }
-    val dim = centroids(0).length
-
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(centroids)
-      val (counts, sums) = sample.as[(Long, Seq[Double])].rdd
-        .mapPartitions { rows =>
-          val cents = bc.value
-          val cnt = new Array[Long](cents.length)
-          val sum = Array.ofDim[Double](cents.length, dim)
-          rows.foreach { case (_, v) =>
-            val a = v.toArray
-            val c = nearestCentroid(a, cents)
-            cnt(c) += 1
-            var i = 0; while (i < dim) { sum(c)(i) += a(i); i += 1 }
+      .repartition(spark.sparkContext.defaultParallelism)) { sample =>
+      var centroids: Array[Array[Double]] = sample
+        .orderBy(xxhash64(col("vid")), col("vid"))
+        .limit(k)
+        .select(col("v")).as[Seq[Double]].collect().map(_.toArray)
+      if (centroids.nonEmpty) {
+        val dim = centroids(0).length
+        for (_ <- 0 until iters) {
+          val bc = spark.sparkContext.broadcast(centroids)
+          val (counts, sums) = sample.as[(Long, Seq[Double])].rdd
+            .mapPartitions { rows =>
+              val cents = bc.value
+              val cnt = new Array[Long](cents.length)
+              val sum = Array.ofDim[Double](cents.length, dim)
+              rows.foreach { case (_, v) =>
+                val a = v.toArray
+                val c = nearestCentroid(a, cents)
+                cnt(c) += 1
+                var i = 0; while (i < dim) { sum(c)(i) += a(i); i += 1 }
+              }
+              Iterator.single((cnt, sum))
+            }
+            .reduce { case ((c1, s1), (c2, s2)) =>
+              var c = 0
+              while (c < c1.length) {
+                c1(c) += c2(c)
+                var i = 0; while (i < dim) { s1(c)(i) += s2(c)(i); i += 1 }
+                c += 1
+              }
+              (c1, s1)
+            }
+          bc.destroy()
+          centroids = centroids.zipWithIndex.map { case (old, c) =>
+            if (counts(c) > 0) sums(c).map(_ / counts(c))
+            else old // empty cell keeps its centroid
           }
-          Iterator.single((cnt, sum))
         }
-        .reduce { case ((c1, s1), (c2, s2)) =>
-          var c = 0
-          while (c < c1.length) {
-            c1(c) += c2(c)
-            var i = 0; while (i < dim) { s1(c)(i) += s2(c)(i); i += 1 }
-            c += 1
-          }
-          (c1, s1)
-        }
-      bc.unpersist()
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) > 0) sums(c).map(_ / counts(c))
-        else old // empty cell keeps its centroid
       }
+      Model(centroids)
     }
-    sample.unpersist()
-    Model(centroids)
   }
 
   /** Persist the assigned corpus hive-partitioned by cell: a probe
@@ -240,58 +239,57 @@ object IvfIndex {
       scale: Long = 1000L): Array[Array[Long]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = corpus
-      .select(id.cast("bigint").as("vid"), quantized(vec, scale).as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents: Array[Array[Long]] = q.orderBy(col("vid")).limit(k)
-      .select(col("qv")).as[Seq[Long]].collect().map(_.toArray)
-    for (_ <- 0 until iters if cents.nonEmpty) {
-      // one job per iteration, shaped like MLlib's KMeans round: a
-      // per-partition imperative combiner holds the k·dim sum/count
-      // state and emits one fixed-size partial per partition — no
-      // per-dimension rows, no expression-tree array allocs in the
-      // argmin hot loop. Exact integer sums are addition-order
-      // independent: bit-identical to the declarative form and to
-      // the unrolled-CTE twin.
-      val cur = cents
-      val dim = cur(0).length
-      val kk = cur.length
-      val partials = q.select(col("qv")).as[Array[Long]].mapPartitions { rows =>
+    PlanCache.scoped(corpus
+      .select(id.cast("bigint").as("vid"), quantized(vec, scale).as("qv"))) { q =>
+      var cents: Array[Array[Long]] = q.orderBy(col("vid")).limit(k)
+        .select(col("qv")).as[Seq[Long]].collect().map(_.toArray)
+      for (_ <- 0 until iters if cents.nonEmpty) {
+        // one job per iteration, shaped like MLlib's KMeans round: a
+        // per-partition imperative combiner holds the k·dim sum/count
+        // state and emits one fixed-size partial per partition — no
+        // per-dimension rows, no expression-tree array allocs in the
+        // argmin hot loop. Exact integer sums are addition-order
+        // independent: bit-identical to the declarative form and to
+        // the unrolled-CTE twin.
+        val cur = cents
+        val dim = cur(0).length
+        val kk = cur.length
+        val partials = q.select(col("qv")).as[Array[Long]].mapPartitions { rows =>
+          val sums = Array.ofDim[Long](kk * dim)
+          val counts = Array.ofDim[Long](kk)
+          rows.foreach { arr =>
+            var best = 0
+            var bestD = Long.MaxValue
+            var c = 0
+            while (c < kk) {
+              val cent = cur(c)
+              var acc = 0L
+              var d = 0
+              while (d < dim) { val diff = arr(d) - cent(d); acc += diff * diff; d += 1 }
+              if (acc < bestD) { bestD = acc; best = c } // first min = smallest cell
+              c += 1
+            }
+            counts(best) += 1
+            var d = 0
+            while (d < dim) { sums(best * dim + d) += arr(d); d += 1 }
+          }
+          Iterator.single((sums, counts))
+        }.collect()
         val sums = Array.ofDim[Long](kk * dim)
         val counts = Array.ofDim[Long](kk)
-        rows.foreach { arr =>
-          var best = 0
-          var bestD = Long.MaxValue
-          var c = 0
-          while (c < kk) {
-            val cent = cur(c)
-            var acc = 0L
-            var d = 0
-            while (d < dim) { val diff = arr(d) - cent(d); acc += diff * diff; d += 1 }
-            if (acc < bestD) { bestD = acc; best = c } // first min = smallest cell
-            c += 1
-          }
-          counts(best) += 1
-          var d = 0
-          while (d < dim) { sums(best * dim + d) += arr(d); d += 1 }
+        partials.foreach { case (ps, pc) =>
+          var i = 0
+          while (i < ps.length) { sums(i) += ps(i); i += 1 }
+          i = 0
+          while (i < pc.length) { counts(i) += pc(i); i += 1 }
         }
-        Iterator.single((sums, counts))
-      }.collect()
-      val sums = Array.ofDim[Long](kk * dim)
-      val counts = Array.ofDim[Long](kk)
-      partials.foreach { case (ps, pc) =>
-        var i = 0
-        while (i < ps.length) { sums(i) += ps(i); i += 1 }
-        i = 0
-        while (i < pc.length) { counts(i) += pc(i); i += 1 }
+        val next = cur.map(_.clone())
+        for (c <- 0 until kk if counts(c) > 0; d <- 0 until dim)
+          next(c)(d) = sums(c * dim + d) / counts(c)
+        cents = next
       }
-      val next = cur.map(_.clone())
-      for (c <- 0 until kk if counts(c) > 0; d <- 0 until dim)
-        next(c)(d) = sums(c * dim + d) / counts(c)
-      cents = next
+      cents
     }
-    q.unpersist()
-    cents
   }
 
   /** Integer-portable IVF top-k end to end: fit, assign (narrow map),

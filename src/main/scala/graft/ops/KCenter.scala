@@ -4,7 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.PlanCache
 
 /** Greedy k-center coreset selection (Gonzalez farthest-point
   * traversal) — the diverse-subset selector a training-data pipeline
@@ -52,71 +53,69 @@ object KCenter {
     require(k >= 1, "k must be >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = corpus
-      .select(id.cast("bigint").as("vid"), IvfIndex.quantized(vec, scale).as("qv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    PlanCache.scoped(corpus
+      .select(id.cast("bigint").as("vid"), IvfIndex.quantized(vec, scale).as("qv"))) { q =>
+      val seed = q.orderBy(col("vid")).limit(1)
+        .as[(Long, Seq[Long])].collect()(0)
+      val sel = ArrayBuffer[(Long, Long, Array[Long])]((seed._1, 0L, seed._2.toArray))
 
-    val seed = q.orderBy(col("vid")).limit(1)
-      .as[(Long, Seq[Long])].collect()(0)
-    val sel = ArrayBuffer[(Long, Long, Array[Long])]((seed._1, 0L, seed._2.toArray))
-
-    for (_ <- 2 to k) {
-      val cents = sel.map(_._3).toArray
-      val selected = sel.map(_._1).toSet
-      val perPart = q.as[(Long, Array[Long])].mapPartitions { rows =>
-        var bVid = Long.MaxValue
-        var bD = -1L
-        var bQv: Array[Long] = null
-        rows.foreach { case (vid, arr) =>
-          if (!selected.contains(vid)) {
-            var md = Long.MaxValue
-            var c = 0
-            while (c < cents.length) {
-              val cent = cents(c)
-              var acc = 0L
-              var d = 0
-              while (d < arr.length) { val df = arr(d) - cent(d); acc += df * df; d += 1 }
-              if (acc < md) md = acc
-              c += 1
+      for (_ <- 2 to k) {
+        val cents = sel.map(_._3).toArray
+        val selected = sel.map(_._1).toSet
+        val perPart = q.as[(Long, Array[Long])].mapPartitions { rows =>
+          var bVid = Long.MaxValue
+          var bD = -1L
+          var bQv: Array[Long] = null
+          rows.foreach { case (vid, arr) =>
+            if (!selected.contains(vid)) {
+              var md = Long.MaxValue
+              var c = 0
+              while (c < cents.length) {
+                val cent = cents(c)
+                var acc = 0L
+                var d = 0
+                while (d < arr.length) { val df = arr(d) - cent(d); acc += df * df; d += 1 }
+                if (acc < md) md = acc
+                c += 1
+              }
+              if (md > bD || (md == bD && vid < bVid)) { bD = md; bVid = vid; bQv = arr }
             }
-            if (md > bD || (md == bD && vid < bVid)) { bD = md; bVid = vid; bQv = arr }
           }
-        }
-        if (bQv != null) Iterator.single((bVid, bD, bQv)) else Iterator.empty
-      }.collect()
-      require(perPart.nonEmpty, s"k=$k exceeds the corpus size")
-      val best = perPart.minBy { case (vid, d, _) => (-d, vid) }
-      sel += best
-    }
-
-    // coverage pass: nearest selected center per point (ties ->
-    // earliest rank), collapsed to k counts per partition
-    val cents = sel.map(_._3).toArray
-    val counts = q.as[(Long, Array[Long])].mapPartitions { rows =>
-      val n = Array.ofDim[Long](cents.length)
-      rows.foreach { case (_, arr) =>
-        var best = 0
-        var bestD = Long.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          val cent = cents(c)
-          var acc = 0L
-          var d = 0
-          while (d < arr.length) { val df = arr(d) - cent(d); acc += df * df; d += 1 }
-          if (acc < bestD) { bestD = acc; best = c }
-          c += 1
-        }
-        n(best) += 1
+          if (bQv != null) Iterator.single((bVid, bD, bQv)) else Iterator.empty
+        }.collect()
+        require(perPart.nonEmpty, s"k=$k exceeds the corpus size")
+        val best = perPart.minBy { case (vid, d, _) => (-d, vid) }
+        sel += best
       }
-      Iterator.single(n)
-    }.collect().foldLeft(Array.ofDim[Long](cents.length)) { (acc, p) =>
-      var i = 0; while (i < p.length) { acc(i) += p(i); i += 1 }; acc
-    }
-    q.unpersist()
 
-    sel.zipWithIndex.map { case ((vid, d, _), i) => (i + 1L, vid, d, counts(i)) }
-      .toSeq.toDF("sel_rank", "vec_id", "dist_sq", "n_assigned")
-      .orderBy(col("sel_rank"))
+      // coverage pass: nearest selected center per point (ties ->
+      // earliest rank), collapsed to k counts per partition
+      val cents = sel.map(_._3).toArray
+      val counts = q.as[(Long, Array[Long])].mapPartitions { rows =>
+        val n = Array.ofDim[Long](cents.length)
+        rows.foreach { case (_, arr) =>
+          var best = 0
+          var bestD = Long.MaxValue
+          var c = 0
+          while (c < cents.length) {
+            val cent = cents(c)
+            var acc = 0L
+            var d = 0
+            while (d < arr.length) { val df = arr(d) - cent(d); acc += df * df; d += 1 }
+            if (acc < bestD) { bestD = acc; best = c }
+            c += 1
+          }
+          n(best) += 1
+        }
+        Iterator.single(n)
+      }.collect().foldLeft(Array.ofDim[Long](cents.length)) { (acc, p) =>
+        var i = 0; while (i < p.length) { acc(i) += p(i); i += 1 }; acc
+      }
+
+      sel.zipWithIndex.map { case ((vid, d, _), i) => (i + 1L, vid, d, counts(i)) }
+        .toSeq.toDF("sel_rank", "vec_id", "dist_sq", "n_assigned")
+        .orderBy(col("sel_rank"))
+    }
   }
 
   /** DuckDB twin: the same traversal unrolled to k-1 CTE rounds over

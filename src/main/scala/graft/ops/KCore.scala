@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.PlanCache
+import graft.util.PlanCache.Shareable
 
 /** k-core decomposition of the near-dup candidate graph — the
   * density filter that separates REAL duplicate communities from the
@@ -41,13 +43,11 @@ object KCore {
     */
   def core(edges: DataFrame, k: Int, maxRounds: Int = 200): DataFrame = {
     require(k >= 1, "k >= 1")
-    // the canonical edge set is OWNED by PlanCache (shared local
-    // checkpoint): repeated peels over the same graph — bench passes,
-    // core() after profile(), k-sweeps — start from the materialized
-    // distinct edges instead of re-running the candidate self-join;
-    // footprint is identical to the former per-call localCheckpoint,
-    // ownership + cross-call reuse are what change
-    val e0 = graft.util.PlanCache.checkpointShared(canonical(edges))
+    // the canonical edge set is a shared checkpoint: repeated peels
+    // over the same graph — bench passes, core() after profile(),
+    // k-sweeps — start from the materialized distinct edges instead
+    // of re-running the candidate self-join
+    val e0 = canonical(edges).sharedCheckpoint()
     val (deg, _, _) = peelTo(e0, e0.count(), k, maxRounds)
     deg.select(col("node"), col("degree").as("core_degree"))
   }
@@ -104,22 +104,17 @@ object KCore {
       // lineage stays bounded: a real checkpoint copy every 8th
       // round, a plain persist otherwise
       val mat = if ((rounds + 1) % 8 == 0) ne.localCheckpoint()
-        else ne.persist(StorageLevel.MEMORY_AND_DISK)
+        else ne.persist()
       val nn = mat.count()
-      // round-scoped frames free through PlanCache.free: deg (and
-      // every 8th mat/e) is a localCheckpoint, on which a bare
-      // DataFrame.unpersist is a NO-OP (no CacheManager entry;
-      // ADVICE r13) — degree-table blocks accumulated across rounds
       if (nn == n) {           // fixpoint: no node fell below k
-        graft.util.PlanCache.free(mat)
+        PlanCache.free(mat)
         return (deg, e, n)
       }
-      graft.util.PlanCache.free(deg)
-      // drop the replaced round's cache once the new one is fully
+      PlanCache.free(deg)
+      // drop the replaced round's edges once the new ones are fully
       // materialized (the count above): live residency stays at two
-      // edge frames + one degree table regardless of peel depth. The
-      // shared e0 checkpoint is PlanCache-owned — never dropped here.
-      if (rounds > 0) graft.util.PlanCache.free(e)
+      // edge frames + one degree table regardless of peel depth
+      PlanCache.free(e)
       e = mat
       n = nn
       rounds += 1
@@ -149,23 +144,18 @@ object KCore {
     require(kMax >= 1, "kMax >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    var e = graft.util.PlanCache.checkpointShared(canonical(edges))
+    var e = canonical(edges).sharedCheckpoint()
     var n = e.count()
     val rows = Seq.newBuilder[(Int, Long, Long)]
-    val e0 = e
     (1 to kMax).foreach { k =>
+      // the peel frees the previous k's edge frame once it moves past it
       val (deg, ek, nk) = peelTo(e, n, k, maxRounds)
       // nodes from one tiny job over the converged CACHED degree
       // table; edges are the running count the peel already knows.
       // An empty core contributes (k, 0, 0).
       rows += ((k, deg.count(), nk))
-      graft.util.PlanCache.free(deg)
-      if (!(ek eq e)) {
-        // this k's peel produced a smaller core: release the previous
-        // k's frame (never the PlanCache-owned starting checkpoint)
-        if (!(e eq e0)) graft.util.PlanCache.free(e)
-        e = ek
-      }
+      PlanCache.free(deg)
+      e = ek
       n = nk
     }
     rows.result().toDF("k", "n_nodes", "n_edges")

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.PlanCache
 
 /** Distributed linear-classifier TRAINING on hashed bag-of-words
   * features — the missing half of the quality-classifier story (C41
@@ -53,16 +54,13 @@ object LinearClassifier {
     */
   def fitPerceptron(features: DataFrame, labels: DataFrame, dim: Int, epochs: Int): PerceptronModel = {
     require(dim > 0 && epochs > 0, "dim and epochs must be positive")
-    val feats = features
-      .join(labels, Seq("doc_id"))
-      .select(col("doc_id"), col("bucket"), col("cnt").cast("long").as("cnt"),
-        col("y").cast("long").as("y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
     val w = Array.fill(dim)(0L)
     var bias = 0L
     val mistakes = Seq.newBuilder[Long]
-    try {
+    PlanCache.scoped(features
+      .join(labels, Seq("doc_id"))
+      .select(col("doc_id"), col("bucket"), col("cnt").cast("long").as("cnt"),
+        col("y").cast("long").as("y"))) { feats =>
       for (_ <- 1 to epochs) {
         val wLit = lit(w)
         // (1) integer margin per doc under the current model
@@ -70,10 +68,8 @@ object LinearClassifier {
           .groupBy(col("doc_id"), col("y"))
           .agg(sum(element_at(wLit, (col("bucket") + 1).cast("int")) * col("cnt")).as("dot"))
           .select(col("doc_id"), col("y"), (col("dot") + bias).as("margin"))
-        val mis = margins.filter(col("y") * col("margin") <= 0)
-          .select(col("doc_id"), col("y"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        PlanCache.scoped(margins.filter(col("y") * col("margin") <= 0)
+          .select(col("doc_id"), col("y"))) { mis =>
           // (2) gradient: Σ y·cnt per bucket over misclassified docs;
           // the bias update rides along as pseudo-bucket -1 and the
           // mistake count as -2, so the whole epoch is ONE driver
@@ -93,9 +89,9 @@ object LinearClassifier {
               case b => w(b.toInt) += r.getLong(1)
             }
           }
-        } finally mis.unpersist()
+        }
       }
-    } finally feats.unpersist()
+    }
     PerceptronModel(w, bias, mistakes.result())
   }
 
@@ -190,9 +186,7 @@ object LinearClassifier {
     */
   def fitPerceptronText(df: DataFrame, id: Column, text: Column, y: Column,
       dim: Int, epochs: Int): PerceptronModel = {
-    val entries = entryFrame(df, id, text, y, dim)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try fitPerceptronEntries(entries, dim, epochs) finally entries.unpersist()
+    PlanCache.scoped(entryFrame(df, id, text, y, dim))(fitPerceptronEntries(_, dim, epochs))
   }
 
   /** Per-doc integer margin + sign prediction under a fitted model
@@ -281,30 +275,25 @@ object LinearClassifier {
   def fitOneVsAll(features: DataFrame, classLabels: DataFrame, classes: Seq[String],
       dim: Int, epochs: Int): Seq[(String, PerceptronModel)] = {
     require(classes.nonEmpty && dim > 0 && epochs > 0)
-    val cached = features
-      .join(classLabels, Seq("doc_id"))
-      .select(col("doc_id"), col("bucket"), col("cnt").cast("long").as("cnt"), col("cls"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
     val w = classes.map(c => c -> Array.fill(dim)(0L)).toMap
     val bias = scala.collection.mutable.Map(classes.map(_ -> 0L): _*)
     val mistakes = scala.collection.mutable.Map(classes.map(_ -> Seq.newBuilder[Long]): _*)
     def yOf(c: String): Column = when(col("cls") === c, 1L).otherwise(-1L)
-    try {
+    PlanCache.scoped(features
+      .join(classLabels, Seq("doc_id"))
+      .select(col("doc_id"), col("bucket"), col("cnt").cast("long").as("cnt"), col("cls"))) { cached =>
       for (_ <- 1 to epochs) {
         // one margin pass: L lookup-sums over the same rows, then the
         // per-class misclassification flags
         val dots = classes.map { c =>
           sum(element_at(lit(w(c)), (col("bucket") + 1).cast("int")) * col("cnt")).as(s"dot_$c")
         }
-        val mflags = cached
+        PlanCache.scoped(cached
           .groupBy(col("doc_id"), col("cls"))
           .agg(dots.head, dots.tail: _*)
           .select(col("doc_id") +: col("cls").as("__cls") +: classes.map { c =>
             (yOf(c) * (col(s"dot_$c") + bias(c)) <= 0L).as(s"mis_$c")
-          }: _*)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+          }: _*)) { mflags =>
           // one gradient collect: per-class conditional sums per
           // bucket, plus bias (-1) and mistake-count (-2) rows
           val gradCols = classes.map { c =>
@@ -336,9 +325,9 @@ object LinearClassifier {
               }
             }
           }
-        } finally mflags.unpersist()
+        }
       }
-    } finally cached.unpersist()
+    }
     classes.map(c => c -> PerceptronModel(w(c), bias(c), mistakes(c).result()))
   }
 
@@ -360,12 +349,10 @@ object LinearClassifier {
     val mistakes = scala.collection.mutable.Map(classes.map(_ -> Seq.newBuilder[Long]): _*)
     def yOf(c: String): Column = when(col("cls") === c, 1L).otherwise(-1L)
     for (_ <- 1 to epochs) {
-      val flagged = entries.select(
+      PlanCache.scoped(entries.select(
         col("cls") +: col("es") +: classes.map { c =>
           (yOf(c) * entryMargin(col("es"), lit(w(c)), bias(c)) <= 0L).as(s"mis_$c")
-        }: _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+        }: _*)) { flagged =>
         val gradCols = classes.map { c =>
           sum(when(col(s"mis_$c"), yOf(c) * col("e.cnt")).otherwise(0L)).as(s"g_$c")
         }
@@ -396,7 +383,7 @@ object LinearClassifier {
             }
           }
         }
-      } finally flagged.unpersist()
+      }
     }
     classes.map(c => c -> PerceptronModel(w(c), bias(c), mistakes(c).result()))
   }
@@ -419,13 +406,11 @@ object LinearClassifier {
     val bias = scala.collection.mutable.Map(names.map(_ -> 0L): _*)
     val mistakes = scala.collection.mutable.Map(names.map(_ -> Seq.newBuilder[Long]): _*)
     for (_ <- 1 to epochs) {
-      val flagged = entries.select(
+      PlanCache.scoped(entries.select(
         col("y") +: col("es") +: arms.zipWithIndex.map { case ((n, flag), i) =>
           (flag && (col("y") * entryMargin(col("es"), lit(w(n)), bias(n)) <= 0L))
             .as(s"mis_$i")
-        }: _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+        }: _*)) { flagged =>
         val idx = names.indices
         val gradCols = idx.map { i =>
           sum(when(col(s"mis_$i"), col("y") * col("e.cnt")).otherwise(0L)).as(s"g_$i")
@@ -454,7 +439,7 @@ object LinearClassifier {
             }
           }
         }
-      } finally flagged.unpersist()
+      }
     }
     names.map(n => n -> PerceptronModel(w(n), bias(n), mistakes(n).result()))
   }

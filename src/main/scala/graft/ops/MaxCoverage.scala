@@ -4,7 +4,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.PlanCache
 
 /** Greedy maximum-coverage selection (the facility-location /
   * submodular-coverage selector, Nemhauser et al. 1978): pick k
@@ -49,59 +50,57 @@ object MaxCoverage {
     require(k >= 1, "k must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    val sets = docs
+    PlanCache.scoped(docs
       .select(id.cast("bigint").as("doc_id"),
         explode(TextAnalysis.wordShingles(text, shingleK)).as("shingle"))
       .select(col("doc_id"), Dedup.md5Hash60(col("shingle")).as("h"))
       .distinct()
       .repartition(col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
-      .as[(Long, Long)]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val picked = mutable.ArrayBuffer[(Long, Long, Long)]()
-    val selIds = mutable.Set[Long]()
-    val coveredHashes = mutable.Set[Long]()
-    var covered = 0L
-    var exhausted = false
-    for (_ <- 1 to k if !exhausted) {
-      val cov = coveredHashes.toSet
-      val taken = selIds.toSet
-      // one candidate per partition: best (gain, doc_id) among its
-      // contiguous doc groups, with the doc's uncovered hashes so the
-      // coverage delta returns in the same job
-      val perPart = sets.mapPartitions { rows =>
-        var bId = Long.MaxValue
-        var bGain = 0L
-        var bNew: Array[Long] = null
-        var curId = Long.MinValue
-        val curNew = mutable.ArrayBuffer[Long]()
-        def flush(): Unit =
-          if (curNew.nonEmpty && !taken.contains(curId) &&
-            (curNew.length > bGain || (curNew.length == bGain && curId < bId))) {
-            bGain = curNew.length; bId = curId; bNew = curNew.toArray
+      .as[(Long, Long)]) { sets =>
+      val picked = mutable.ArrayBuffer[(Long, Long, Long)]()
+      val selIds = mutable.Set[Long]()
+      val coveredHashes = mutable.Set[Long]()
+      var covered = 0L
+      var exhausted = false
+      for (_ <- 1 to k if !exhausted) {
+        val cov = coveredHashes.toSet
+        val taken = selIds.toSet
+        // one candidate per partition: best (gain, doc_id) among its
+        // contiguous doc groups, with the doc's uncovered hashes so the
+        // coverage delta returns in the same job
+        val perPart = sets.mapPartitions { rows =>
+          var bId = Long.MaxValue
+          var bGain = 0L
+          var bNew: Array[Long] = null
+          var curId = Long.MinValue
+          val curNew = mutable.ArrayBuffer[Long]()
+          def flush(): Unit =
+            if (curNew.nonEmpty && !taken.contains(curId) &&
+              (curNew.length > bGain || (curNew.length == bGain && curId < bId))) {
+              bGain = curNew.length; bId = curId; bNew = curNew.toArray
+            }
+          rows.foreach { case (d, h) =>
+            if (d != curId) { flush(); curId = d; curNew.clear() }
+            if (!cov.contains(h)) curNew += h
           }
-        rows.foreach { case (d, h) =>
-          if (d != curId) { flush(); curId = d; curNew.clear() }
-          if (!cov.contains(h)) curNew += h
+          flush()
+          if (bNew != null) Iterator.single((bId, bGain, bNew)) else Iterator.empty
+        }.collect()
+        if (perPart.isEmpty) exhausted = true
+        else {
+          val (vid, gain, newHashes) = perPart.minBy { case (d, g, _) => (-g, d) }
+          covered += gain
+          picked += ((vid, gain, covered))
+          selIds += vid
+          coveredHashes ++= newHashes
         }
-        flush()
-        if (bNew != null) Iterator.single((bId, bGain, bNew)) else Iterator.empty
-      }.collect()
-      if (perPart.isEmpty) exhausted = true
-      else {
-        val (vid, gain, newHashes) = perPart.minBy { case (d, g, _) => (-g, d) }
-        covered += gain
-        picked += ((vid, gain, covered))
-        selIds += vid
-        coveredHashes ++= newHashes
       }
+      picked.zipWithIndex
+        .map { case ((vid, gain, cum), i) => (i + 1L, vid, gain, cum) }
+        .toSeq.toDF("sel_rank", "doc_id", "gain", "covered_total")
+        .orderBy(col("sel_rank"))
     }
-    sets.unpersist()
-    picked.zipWithIndex
-      .map { case ((vid, gain, cum), i) => (i + 1L, vid, gain, cum) }
-      .toSeq.toDF("sel_rank", "doc_id", "gain", "covered_total")
-      .orderBy(col("sel_rank"))
   }
 
   /** DuckDB twin: k unrolled MATERIALIZED rounds over the same

@@ -4,7 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.PlanCache
 
 /** Maximal Marginal Relevance selection (Carbonell & Goldstein '98):
   * pick k items that are RELEVANT to a query but not redundant with
@@ -56,55 +57,53 @@ object Mmr {
     require(qRows.length == 1, s"Mmr.select expects exactly one query row, got ${qRows.length}")
     val qv = qRows(0).getSeq[Long](0).toArray
 
-    val q = corpus
-      .select(id.cast("bigint").as("vid"), unitQ(vec).as("uv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    PlanCache.scoped(corpus
+      .select(id.cast("bigint").as("vid"), unitQ(vec).as("uv"))) { q =>
+      def dot(a: Array[Long], b: Array[Long]): Long = {
+        var s = 0L; var i = 0
+        while (i < a.length) { s += a(i) * b(i); i += 1 }
+        s
+      }
 
-    def dot(a: Array[Long], b: Array[Long]): Long = {
-      var s = 0L; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-
-    // (vid, rel, uv, score-at-selection)
-    val sel = ArrayBuffer.empty[(Long, Long, Array[Long], Long)]
-    for (_ <- 1 to k) {
-      val chosen = sel.map(_._3).toArray
-      val selectedIds = sel.map(_._1).toSet
-      val perPart = q.as[(Long, Array[Long])].mapPartitions { rows =>
-        var bVid = Long.MaxValue
-        var bScore = Long.MinValue
-        var bRel = 0L
-        var bUv: Array[Long] = null
-        rows.foreach { case (vid, uv) =>
-          if (!selectedIds.contains(vid)) {
-            val rel = dot(uv, qv)
-            var maxSim = 0L
-            var first = true
-            var c = 0
-            while (c < chosen.length) {
-              val s = dot(uv, chosen(c))
-              if (first || s > maxSim) { maxSim = s; first = false }
-              c += 1
-            }
-            val score = if (chosen.isEmpty) lam * rel
-              else lam * rel - (1000L - lam) * maxSim
-            if (score > bScore || (score == bScore && vid < bVid)) {
-              bScore = score; bVid = vid; bRel = rel; bUv = uv
+      // (vid, rel, uv, score-at-selection)
+      val sel = ArrayBuffer.empty[(Long, Long, Array[Long], Long)]
+      for (_ <- 1 to k) {
+        val chosen = sel.map(_._3).toArray
+        val selectedIds = sel.map(_._1).toSet
+        val perPart = q.as[(Long, Array[Long])].mapPartitions { rows =>
+          var bVid = Long.MaxValue
+          var bScore = Long.MinValue
+          var bRel = 0L
+          var bUv: Array[Long] = null
+          rows.foreach { case (vid, uv) =>
+            if (!selectedIds.contains(vid)) {
+              val rel = dot(uv, qv)
+              var maxSim = 0L
+              var first = true
+              var c = 0
+              while (c < chosen.length) {
+                val s = dot(uv, chosen(c))
+                if (first || s > maxSim) { maxSim = s; first = false }
+                c += 1
+              }
+              val score = if (chosen.isEmpty) lam * rel
+                else lam * rel - (1000L - lam) * maxSim
+              if (score > bScore || (score == bScore && vid < bVid)) {
+                bScore = score; bVid = vid; bRel = rel; bUv = uv
+              }
             }
           }
-        }
-        if (bUv != null) Iterator.single((bVid, bRel, bUv, bScore)) else Iterator.empty
-      }.collect()
-      require(perPart.nonEmpty, s"k=$k exceeds the corpus size")
-      sel += perPart.minBy { case (vid, _, _, score) => (-score, vid) }
-    }
-    q.unpersist()
+          if (bUv != null) Iterator.single((bVid, bRel, bUv, bScore)) else Iterator.empty
+        }.collect()
+        require(perPart.nonEmpty, s"k=$k exceeds the corpus size")
+        sel += perPart.minBy { case (vid, _, _, score) => (-score, vid) }
+      }
 
-    sel.zipWithIndex
-      .map { case ((vid, rel, _, score), i) => (i + 1L, vid, rel, score) }
-      .toSeq.toDF("sel_rank", "vec_id", "rel_q", "mmr_q")
-      .orderBy(col("sel_rank"))
+      sel.zipWithIndex
+        .map { case ((vid, rel, _, score), i) => (i + 1L, vid, rel, score) }
+        .toSeq.toDF("sel_rank", "vec_id", "rel_q", "mmr_q")
+        .orderBy(col("sel_rank"))
+    }
   }
 
   /** The scale path: restrict the MMR loop to the `candN` most

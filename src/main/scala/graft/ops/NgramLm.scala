@@ -3,7 +3,6 @@ package graft.ops
 import graft.util.PlanCache.Shareable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Interpolated bigram language-model scoring — the CCNet-style
   * "perplexity filter" of training-data pipelines: fit n-gram counts
@@ -143,19 +142,13 @@ object NgramLm {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("lp_micro")).as("sum_micro"))
 
-    val out = toks.select(col("doc_id"))
+    toks.select(col("doc_id"))
       .join(contrib, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         when(col("n_bigrams").isNotNull,
           round(col("sum_micro").cast("double") / (col("n_bigrams") * 1e6), 4))
           .otherwise(lit(0.0)).as("avg_logprob"))
-    // NOTE: no eager unpersist here — nothing has evaluated yet, so
-    // an unpersist at this point would silently discard the persist
-    // marks before the first action and every consumer would
-    // re-tokenize (measured: the whole stream subtree ran 5× per
-    // query). The blocks age out LRU under MEMORY_AND_DISK.
-    out
   }
 
   /** DuckDB twin of [[kneserNeyScore]] over `table(doc_id, text)`;

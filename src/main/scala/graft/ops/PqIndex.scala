@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.PlanCache
+
 /** Product quantization ANN (C78): split each vector into `m`
   * contiguous subvectors, learn a small k-centroid codebook per
   * subvector (integer fixed-point Lloyd's — the C7b device), encode
@@ -57,69 +59,68 @@ object PqIndex {
     val subDim = dim / m
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = corpus
+    PlanCache.scoped(corpus
       .select(id.cast("bigint").as("vid"),
-        IvfIndex.quantized(vec, scale).as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // seeds: the k smallest vids' slices — identical to per-sub fits
-    val seedRows = q.orderBy(col("vid")).limit(k)
-      .select(col("qv")).as[Seq[Long]].collect()
-    val books: Array[Array[Array[Long]]] = Array.tabulate(m) { s =>
-      seedRows.map(_.slice(s * subDim, (s + 1) * subDim).toArray)
-    }
-    for (_ <- 0 until iters) {
-      // one job per iteration, shaped like MLlib's KMeans round: a
-      // per-partition imperative combiner holds the full m·k·subDim
-      // sum/count state (1–2 KB) and emits ONE fixed-size partial per
-      // partition — no explode, no per-subvector rows, no expression-
-      // tree array allocs in the argmin hot loop. Exact integer sums
-      // are addition-order independent, so results stay bit-identical
-      // to the declarative form (and to the per-sub twin fits).
-      val curBooks = books.map(_.map(_.clone()))
-      val partials = q.select(col("qv")).as[Array[Long]].mapPartitions { rows =>
+        IvfIndex.quantized(vec, scale).as("qv"))) { q =>
+      // seeds: the k smallest vids' slices — identical to per-sub fits
+      val seedRows = q.orderBy(col("vid")).limit(k)
+        .select(col("qv")).as[Seq[Long]].collect()
+      val books: Array[Array[Array[Long]]] = Array.tabulate(m) { s =>
+        seedRows.map(_.slice(s * subDim, (s + 1) * subDim).toArray)
+      }
+      for (_ <- 0 until iters) {
+        // one job per iteration, shaped like MLlib's KMeans round: a
+        // per-partition imperative combiner holds the full m·k·subDim
+        // sum/count state (1–2 KB) and emits ONE fixed-size partial per
+        // partition — no explode, no per-subvector rows, no expression-
+        // tree array allocs in the argmin hot loop. Exact integer sums
+        // are addition-order independent, so results stay bit-identical
+        // to the declarative form (and to the per-sub twin fits).
+        val curBooks = books.map(_.map(_.clone()))
+        val partials = q.select(col("qv")).as[Array[Long]].mapPartitions { rows =>
+          val sums = Array.ofDim[Long](m * k * subDim)
+          val counts = Array.ofDim[Long](m * k)
+          rows.foreach { arr =>
+            var s = 0
+            while (s < m) {
+              val bs = curBooks(s)
+              var best = 0
+              var bestD = Long.MaxValue
+              var c = 0
+              while (c < k) {
+                val cent = bs(c)
+                var acc = 0L
+                var d = 0
+                while (d < subDim) {
+                  val diff = arr(s * subDim + d) - cent(d)
+                  acc += diff * diff
+                  d += 1
+                }
+                if (acc < bestD) { bestD = acc; best = c } // first min = smallest cell
+                c += 1
+              }
+              counts(s * k + best) += 1
+              val off = (s * k + best) * subDim
+              var d = 0
+              while (d < subDim) { sums(off + d) += arr(s * subDim + d); d += 1 }
+              s += 1
+            }
+          }
+          Iterator.single((sums, counts))
+        }.collect()
         val sums = Array.ofDim[Long](m * k * subDim)
         val counts = Array.ofDim[Long](m * k)
-        rows.foreach { arr =>
-          var s = 0
-          while (s < m) {
-            val bs = curBooks(s)
-            var best = 0
-            var bestD = Long.MaxValue
-            var c = 0
-            while (c < k) {
-              val cent = bs(c)
-              var acc = 0L
-              var d = 0
-              while (d < subDim) {
-                val diff = arr(s * subDim + d) - cent(d)
-                acc += diff * diff
-                d += 1
-              }
-              if (acc < bestD) { bestD = acc; best = c } // first min = smallest cell
-              c += 1
-            }
-            counts(s * k + best) += 1
-            val off = (s * k + best) * subDim
-            var d = 0
-            while (d < subDim) { sums(off + d) += arr(s * subDim + d); d += 1 }
-            s += 1
-          }
+        partials.foreach { case (ps, pc) =>
+          var i = 0
+          while (i < ps.length) { sums(i) += ps(i); i += 1 }
+          i = 0
+          while (i < pc.length) { counts(i) += pc(i); i += 1 }
         }
-        Iterator.single((sums, counts))
-      }.collect()
-      val sums = Array.ofDim[Long](m * k * subDim)
-      val counts = Array.ofDim[Long](m * k)
-      partials.foreach { case (ps, pc) =>
-        var i = 0
-        while (i < ps.length) { sums(i) += ps(i); i += 1 }
-        i = 0
-        while (i < pc.length) { counts(i) += pc(i); i += 1 }
+        for (s <- 0 until m; c <- 0 until k if counts(s * k + c) > 0; d <- 0 until subDim)
+          books(s)(c)(d) = sums((s * k + c) * subDim + d) / counts(s * k + c)
       }
-      for (s <- 0 until m; c <- 0 until k if counts(s * k + c) > 0; d <- 0 until subDim)
-        books(s)(c)(d) = sums((s * k + c) * subDim + d) / counts(s * k + c)
+      Codebooks(m, subDim, scale, books)
     }
-    q.unpersist()
-    Codebooks(m, subDim, scale, books)
   }
 
   /** Encode: (vec_id, codes array<int> of length m) — a zero-shuffle

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.util.PlanCache.Shareable
 
 /** Semantic deduplication (SemDeDup-style, Abbas et al. 2023):
   * cluster embeddings into cells, then flag within-cell pairs whose
@@ -67,7 +68,7 @@ object SemanticDedup {
     val cells = df.select(id.cast("bigint").as("vec_id"),
       vec.cast("array<double>").as("v"),
       cellOf(vec, anchorSeq).as("cell"))
-      .localCheckpoint(true)
+      .sharedCheckpoint()
     val a = cells.select(col("cell"), col("vec_id").as("id_a"), col("v").as("v_a"))
     val b = cells.select(col("cell"), col("vec_id").as("id_b"), col("v").as("v_b"))
     a.join(b, Seq("cell"))

@@ -4,7 +4,6 @@ import graft.util.PlanCache.Shareable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact set-similarity self-join with prefix filtering (the PPJoin
   * family, Xiao et al. 2008): every pair with word-shingle Jaccard

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.LinearClassifier.PerceptronModel
-import graft.util.PlanCache.Shareable
+import graft.util.PlanCache
 
 /** Leave-one-source-out data valuation (C124) — the ablation answer
   * to "is this corpus source helping or hurting the gate": for each
@@ -62,7 +62,7 @@ object SourceAblation {
     // and a label join on the eval side (guide §2.4). Labels join
     // once (the audit's signature keeps them a frame); `y` rides
     // long for the fit, original-typed for the AUC.
-    val entries = LinearClassifier
+    PlanCache.scoped(LinearClassifier
       .entryFrameWith(docs, id, text, dim,
         "source" -> source.cast("string"),
         "is_eval" -> (Dedup.md5Hash60(concat(lit("ablsplit:"), id.cast("string")))
@@ -70,65 +70,63 @@ object SourceAblation {
       .join(labels.select(col("doc_id").cast("bigint").as("doc_id"), col("y")),
         Seq("doc_id"))
       .select(col("doc_id"), col("es"), col("source"), col("is_eval"),
-        col("y").as("y_out"), col("y").cast("long").as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("y").as("y_out"), col("y").cast("long").as("y"))) { entries =>
+      // FUSED K+1 fits (the fitOneVsAll device applied to row subsets):
+      // every arm — baseline plus one per ablated source — updates from
+      // ONE flagged pass + ONE gradient collect per epoch, instead of
+      // (K+1)·epochs sequential actions. Arithmetic is independent per
+      // arm, so the fused models are bit-identical to the sequential
+      // chain (spec-pinned on the separable fixture). Arm flags are
+      // null-safe: a NULL source must stay in every ablated fit,
+      // matching the twin's NOT IN (... WHERE source = 's0') — plain
+      // =!= would evaluate NULL to NULL and drop those rows.
+      val armNames = "__all__" +: ablate.sorted
+      val arms = armNames.map {
+        case "__all__" => ("__all__", !col("is_eval"))
+        case s0 => (s0, !col("is_eval") && !(col("source") <=> lit(s0)))
+      }
+      val models = LinearClassifier.fitArmsEntries(entries, arms, dim, epochs).toMap
 
-    // FUSED K+1 fits (the fitOneVsAll device applied to row subsets):
-    // every arm — baseline plus one per ablated source — updates from
-    // ONE flagged pass + ONE gradient collect per epoch, instead of
-    // (K+1)·epochs sequential actions. Arithmetic is independent per
-    // arm, so the fused models are bit-identical to the sequential
-    // chain (spec-pinned on the separable fixture). Arm flags are
-    // null-safe: a NULL source must stay in every ablated fit,
-    // matching the twin's NOT IN (... WHERE source = 's0') — plain
-    // =!= would evaluate NULL to NULL and drop those rows.
-    val armNames = "__all__" +: ablate.sorted
-    val arms = armNames.map {
-      case "__all__" => ("__all__", !col("is_eval"))
-      case s0 => (s0, !col("is_eval") && !(col("source") <=> lit(s0)))
+      // one grouped-AUC job for all K+1 models (finish() is shared with
+      // the global aucMilli, so per-arm values equal the per-model
+      // aucMilli calls this replaces): arm margins are in-row folds
+      // over the SAME persisted eval rows, unioned under an arm key
+      val evalE = entries.filter(col("is_eval"))
+      val scoredAll = armNames.map(n => evalE.select(lit(n).as("arm"),
+          LinearClassifier.entryMarginExpr(col("es"), models(n)).as("margin"),
+          col("y_out").as("y")))
+        .reduce(_ unionAll _)
+      val aucRows = RankEval.aucMilliByGroup(scoredAll, col("arm"), col("margin"), col("y"))
+        .collect().map(r => r.getString(0) -> r).toMap
+      def aucOf(arm: String): Long = {
+        // a degenerate eval split (empty, or single-class -> the -1
+        // sentinel) would make every delta 0 and the audit read as
+        // "no source matters" — fail loudly instead
+        val r = aucRows.getOrElse(arm,
+          throw new IllegalStateException(s"degenerate eval split: no rows for $arm"))
+        require(!r.isNullAt(r.fieldIndex("auc_milli"))
+            && r.getAs[Long]("auc_milli") >= 0L,
+          s"degenerate eval split: p=${r.get(r.fieldIndex("p"))}, " +
+            s"n=${r.get(r.fieldIndex("n"))} — need both classes held out")
+        r.getAs[Long]("auc_milli")
+      }
+
+      val baseAuc = aucOf("__all__")
+      // from `docs`, NOT the entry frame: n_removed counts every
+      // non-eval doc of the source, token-less ones included (the twin
+      // counts FROM documents)
+      val removedCounts = docs
+        .select(source.cast("string").as("source"),
+          (Dedup.md5Hash60(concat(lit("ablsplit:"), id.cast("string"))) % evalMod === 0)
+            .as("is_eval"))
+        .filter(!col("is_eval"))
+        .groupBy(col("source")).agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      ablate.sorted.map { s0 =>
+        val auc = aucOf(s0)
+        (s0, removedCounts.getOrElse(s0, 0L), auc, baseAuc, baseAuc - auc)
+      }.toDF("source", "n_removed", "auc_milli", "base_auc_milli", "delta_milli")
     }
-    val models = LinearClassifier.fitArmsEntries(entries, arms, dim, epochs).toMap
-
-    // one grouped-AUC job for all K+1 models (finish() is shared with
-    // the global aucMilli, so per-arm values equal the per-model
-    // aucMilli calls this replaces): arm margins are in-row folds
-    // over the SAME persisted eval rows, unioned under an arm key
-    val evalE = entries.filter(col("is_eval"))
-    val scoredAll = armNames.map(n => evalE.select(lit(n).as("arm"),
-        LinearClassifier.entryMarginExpr(col("es"), models(n)).as("margin"),
-        col("y_out").as("y")))
-      .reduce(_ unionAll _)
-    val aucRows = RankEval.aucMilliByGroup(scoredAll, col("arm"), col("margin"), col("y"))
-      .collect().map(r => r.getString(0) -> r).toMap
-    def aucOf(arm: String): Long = {
-      // a degenerate eval split (empty, or single-class -> the -1
-      // sentinel) would make every delta 0 and the audit read as
-      // "no source matters" — fail loudly instead
-      val r = aucRows.getOrElse(arm,
-        throw new IllegalStateException(s"degenerate eval split: no rows for $arm"))
-      require(!r.isNullAt(r.fieldIndex("auc_milli"))
-          && r.getAs[Long]("auc_milli") >= 0L,
-        s"degenerate eval split: p=${r.get(r.fieldIndex("p"))}, " +
-          s"n=${r.get(r.fieldIndex("n"))} — need both classes held out")
-      r.getAs[Long]("auc_milli")
-    }
-
-    val baseAuc = aucOf("__all__")
-    // from `docs`, NOT the entry frame: n_removed counts every
-    // non-eval doc of the source, token-less ones included (the twin
-    // counts FROM documents)
-    val removedCounts = docs
-      .select(source.cast("string").as("source"),
-        (Dedup.md5Hash60(concat(lit("ablsplit:"), id.cast("string"))) % evalMod === 0)
-          .as("is_eval"))
-      .filter(!col("is_eval"))
-      .groupBy(col("source")).agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    entries.unpersist()
-    ablate.sorted.map { s0 =>
-      val auc = aucOf(s0)
-      (s0, removedCounts.getOrElse(s0, 0L), auc, baseAuc, baseAuc - auc)
-    }.toDF("source", "n_removed", "auc_milli", "base_auc_milli", "delta_milli")
   }
 
   /** DuckDB twin: per-ablation lab CTEs + one unrolled fit chain per

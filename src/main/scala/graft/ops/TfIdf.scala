@@ -3,7 +3,6 @@ package graft.ops
 import graft.util.PlanCache.Shareable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Sparse idf-weighted all-pairs document similarity (C74): cosine
   * over the idf-weighted shingle-incidence vectors, computed by an

@@ -3,7 +3,6 @@ package graft.ops
 import graft.util.PlanCache.Shareable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Triangle counting + local clustering coefficients over the
   * near-dup candidate graph — the structural diagnostic the dedup

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.{Calibration, DecisionStump, FeatureSelect, Features, LinearClassifier, NaiveBayes}
+import graft.util.PlanCache
 
 /** Trained-classifier queries: hashed bag-of-words features (C70),
   * distributed linear-classifier training and its serving-path
@@ -13,8 +14,9 @@ import graft.ops.{Calibration, DecisionStump, FeatureSelect, Features, LinearCla
   * decision-stump split search (C114), and chi-square feature
   * selection (C110).
   *
-  * The deterministic fits are memoized per (sfDir, dim, epochs) via
-  * [[Memo]] — every eval-family query shares ONE fit per dataset
+  * The deterministic fits are memoized per (session, sfDir, dim,
+  * epochs) via `PlanCache.memo` — every eval-family query shares ONE
+  * fit per dataset
   * instead of re-running the identical bit-exact training chain.
   */
 object ClassifierQueries {
@@ -69,7 +71,7 @@ object ClassifierQueries {
     * feature exchange and one tiny gradient agg per epoch.
     */
   private[queries] def fit(s: SparkSession, dir: String): LinearClassifier.PerceptronModel =
-    Memo.cached(s"perceptron:$dir:$ClsDim:$ClsEpochs") {
+    PlanCache.memo(s, s"perceptron:$dir:$ClsDim:$ClsEpochs") {
       val docs = t(s, dir, "documents")
       LinearClassifier.fitPerceptronText(docs, col("doc_id"), col("text"),
         labelExpr, ClsDim, ClsEpochs)
@@ -99,7 +101,7 @@ object ClassifierQueries {
     // O(epochs·dim) driver data, memoized like the final fit.
     "q_cartography" -> { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val snaps = Memo.cached(s"cartography:$dir:$ClsDim:$ClsEpochs") {
+      val snaps = PlanCache.memo(s, s"cartography:$dir:$ClsDim:$ClsEpochs") {
         graft.ops.Cartography.trajectoryText(docs, col("doc_id"), col("text"),
           labelExpr, ClsDim, ClsEpochs)
       }
@@ -128,12 +130,10 @@ object ClassifierQueries {
     // doc-keyed aggregation pass with deterministic ties).
     "q_ova_lang" -> { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val models = Memo.cached(s"ova:$dir:$ClsDim:$OvaEpochs") {
-        val entries = LinearClassifier.entryFrameWith(docs,
-            col("doc_id"), col("text"), ClsDim, "cls" -> col("lang"))
-          .persist()
-        try LinearClassifier.fitOneVsAllEntries(entries, OvaClasses, ClsDim, OvaEpochs)
-        finally entries.unpersist()
+      val models = PlanCache.memo(s, s"ova:$dir:$ClsDim:$OvaEpochs") {
+        PlanCache.scoped(LinearClassifier.entryFrameWith(docs,
+            col("doc_id"), col("text"), ClsDim, "cls" -> col("lang")))(
+          LinearClassifier.fitOneVsAllEntries(_, OvaClasses, ClsDim, OvaEpochs))
       }
       // text-path argmax serving: one narrow projection, no explode,
       // no doc-keyed exchange, no class-label self-join

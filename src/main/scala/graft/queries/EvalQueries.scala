@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.{ClusterAgreement, Conformal, CorpusStats, CrossVal, Dedup, LinearClassifier, RankEval, RocCurve, Splits}
+import graft.util.PlanCache
 
 /** Model/data evaluation queries: exact distributed AUC global and
   * per-group (C102), fixed-threshold classifier evaluation (C100),
@@ -112,7 +113,7 @@ object EvalQueries {
       // too, so later passes don't re-pay the K+1 sequential
       // AUC-fetch jobs (each a full scoring agg; the r13 tripwire
       // caught the 2.5x pass cost)
-      val rows = Memo.cached(
+      val rows = PlanCache.memo(s,
         s"ablrows:$dir:${ClassifierQueries.ClsDim}:$AblEpochs") {
         val docs = t(s, dir, "documents")
         graft.ops.SourceAblation.aucDeltas(docs, col("doc_id"), col("text"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.{Dedup, IvfIndex, Multimodal, Similarity}
+import graft.util.PlanCache
 
 /** Vector-search and multimodal capability queries (SURVEY.md §2.C)
   * over the embeddings/documents tables.
@@ -14,20 +15,14 @@ object VectorQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.read(s, dir, "embeddings")
 
-  // C138 fit memo (the armsMemo pattern): the result is a 64-row
-  // local frame, dropped when its session stops
-  private val pcaMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Memoized C138 component — shared by q_pca_power and the C146
-    * anisotropy audit (the fit is an EAGER driver-round loop over an
-    * immutable bench fixture, so a rebuild must not re-fit).
+  /** Memoized C138 component (a 64-row local frame) — shared by
+    * q_pca_power and the C146 anisotropy audit (the fit is an EAGER
+    * driver-round loop over an immutable bench fixture, so a rebuild
+    * must not re-fit).
     */
-  private def pcaComponent(s: SparkSession, dir: String): DataFrame = {
-    pcaMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pcaMemo.remove)
-    pcaMemo.getOrElseUpdate((s, dir),
+  private def pcaComponent(s: SparkSession, dir: String): DataFrame =
+    PlanCache.memo(s, ("pca", dir))(
       graft.ops.Pca.topComponent(emb(s, dir), col("embedding"), dim = 64, iters = 3))
-  }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // C6: brute-force cosine top-k vs the vec_id=0 query vector.
@@ -141,9 +136,9 @@ object VectorQueries {
     // C138: power-iteration PCA — the corpus's dominant semantic
     // axis from one distributed aggregation per round (closure-
     // literal iterate, exact integer sums, no covariance matrix).
-    // The fitted component is memoized per (session, dir) — the
-    // armsMemo contract: the op is EAGER (driver-round loop) over an
-    // immutable bench fixture, so a rebuild must not re-fit.
+    // The fitted component is memoized per (session, dir): the op is
+    // EAGER (driver-round loop) over an immutable bench fixture, so a
+    // rebuild must not re-fit.
     "q_pca_power" -> { (s, dir) =>
       pcaComponent(s, dir).orderBy(col("d"))
     },

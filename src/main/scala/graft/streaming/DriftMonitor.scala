@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.streaming.GtfsRtPipeline.ParquetStateStore
+import graft.util.PlanCache
 
 /** Streaming corpus-drift monitor — the continuous twin of C42's
   * batch drift stats: as document batches arrive, maintain durable
@@ -76,10 +77,8 @@ object DriftMonitor {
         case Some(prev) => prev.unionByName(batchCounts)
         case None => batchCounts
       }).groupBy(col("source"), col("w")).agg(sum(col("c")).as("c"))
-        .persist()
       // versioned rename-commit: state + applied marker land together
-      store.write(merged, batchId.map(_.toString))
-      merged.unpersist()
+      PlanCache.scoped(merged)(store.write(_, batchId.map(_.toString)))
     }
 
     // score from the store read-back: fresh parquet lineage (no

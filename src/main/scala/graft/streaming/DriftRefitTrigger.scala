@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.ops.{CorpusStats, LinearClassifier}
 import graft.ops.LinearClassifier.PerceptronModel
 import graft.streaming.GtfsRtPipeline.ParquetStateStore
+import graft.util.PlanCache
 
 /** Drift-triggered re-fit handshake for the streaming classifier
   * gate (B17 + C119): the gate scores against a STATIC model, which
@@ -81,9 +82,7 @@ object DriftRefitTrigger {
         case Some(prev) => prev.unionByName(batchCounts)
         case None => batchCounts
       }).groupBy(col("bin")).agg(sum(col("n")).as("n"))
-        .persist()
-      countStore.write(merged, batchId.map(_.toString))
-      merged.unpersist()
+      PlanCache.scoped(merged)(countStore.write(_, batchId.map(_.toString)))
     }
 
     // PSI of accumulated current counts vs the fit-time reference.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.streaming.GtfsRtPipeline.ParquetStateStore
+import graft.util.PlanCache
 
 /** Incremental corpus ingest: a continuously-arriving document
   * stream deduplicated EXACTLY against everything already accepted —
@@ -55,8 +56,7 @@ object IncrementalIngest {
       case Some(seen) => batchUnique.join(seen.select(col("fp")), Seq("fp"), "left_anti")
       case None => batchUnique
     }
-    val accepted = fresh.persist()
-    try {
+    PlanCache.scoped(fresh) { accepted =>
       accepted.drop("fp").write.mode("append").parquet(acceptedPath)
       val prior = fingerprints.read(spark).map(_.select(col("fp")))
       val nextStore = prior match {
@@ -64,6 +64,6 @@ object IncrementalIngest {
         case None => accepted.select(col("fp"))
       }
       fingerprints.write(nextStore)
-    } finally accepted.unpersist()
+    }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextAnalysis
+import graft.util.PlanCache
 
 /** Incremental NEAR-duplicate ingest: each arriving batch of
   * documents is checked for near-duplicates against everything
@@ -47,50 +48,46 @@ object IncrementalNearDup {
     val rows = numHashes / bands
     val spark = batch.sparkSession
 
-    val sigs = batch
+    PlanCache.scoped(batch
       .withColumn("__sig", graft.plans.MinHashMd5Expr.minhashSig(
-        TextAnalysis.wordShingles(col(textCol), shingleK), numHashes))
-      .persist()
-    try {
-      val bandRows = bandsOf(sigs.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
-        bands, rows).persist()
+        TextAnalysis.wordShingles(col(textCol), shingleK), numHashes))) { sigs =>
+      PlanCache.scoped(bandsOf(sigs.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
+        bands, rows)) { bandRows =>
+        // 1. within-batch: banded candidates, est-jaccard verify, greedy
+        //    min-id survivor.
+        val batchCands = bandRows.alias("x").join(bandRows.alias("y"),
+            col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
+              col("x.doc_id") < col("y.doc_id"))
+          .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+          .distinct()
+        val sigById = sigs.select(col(idCol).as("doc_id"), col("__sig").as("sig"))
+        val batchDups = verified(batchCands, sigById, sigById, numHashes, estThreshold)
+          .select(col("id_b").as("doc_id")).distinct()
+        val batchKept = sigs.join(batchDups, sigs(idCol) === batchDups("doc_id"), "left_anti")
 
-      // 1. within-batch: banded candidates, est-jaccard verify, greedy
-      //    min-id survivor.
-      val batchCands = bandRows.alias("x").join(bandRows.alias("y"),
-          col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .distinct()
-      val sigById = sigs.select(col(idCol).as("doc_id"), col("__sig").as("sig"))
-      val batchDups = verified(batchCands, sigById, sigById, numHashes, estThreshold)
-        .select(col("id_b").as("doc_id")).distinct()
-      val batchKept = sigs.join(batchDups, sigs(idCol) === batchDups("doc_id"), "left_anti")
+        // 2. against history: the batch's band keys probe the stored
+        //    index; matched historical signatures verify the estimate.
+        val fresh = (readStore(spark, bandStoreDir), readStore(spark, sigStoreDir)) match {
+          case (Some(bandStore), Some(sigStore)) =>
+            val keptBands = bandsOf(batchKept.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
+              bands, rows)
+            val histCands = keptBands.alias("x").join(bandStore.alias("h"),
+                col("x.band") === col("h.band") && col("x.band_key") === col("h.band_key"))
+              .select(col("h.doc_id").as("id_a"), col("x.doc_id").as("id_b"))
+              .distinct()
+            val histDups = verified(histCands, sigStore, sigById, numHashes, estThreshold)
+              .select(col("id_b").as("doc_id")).distinct()
+            batchKept.join(histDups, batchKept(idCol) === histDups("doc_id"), "left_anti")
+          case _ => batchKept
+        }
 
-      // 2. against history: the batch's band keys probe the stored
-      //    index; matched historical signatures verify the estimate.
-      val fresh = (readStore(spark, bandStoreDir), readStore(spark, sigStoreDir)) match {
-        case (Some(bandStore), Some(sigStore)) =>
-          val keptBands = bandsOf(batchKept.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
-            bands, rows)
-          val histCands = keptBands.alias("x").join(bandStore.alias("h"),
-              col("x.band") === col("h.band") && col("x.band_key") === col("h.band_key"))
-            .select(col("h.doc_id").as("id_a"), col("x.doc_id").as("id_b"))
-            .distinct()
-          val histDups = verified(histCands, sigStore, sigById, numHashes, estThreshold)
-            .select(col("id_b").as("doc_id")).distinct()
-          batchKept.join(histDups, batchKept(idCol) === histDups("doc_id"), "left_anti")
-        case _ => batchKept
+        PlanCache.scoped(fresh) { accepted =>
+          accepted.drop("__sig").write.mode("append").parquet(acceptedPath)
+          val acceptedSigs = accepted.select(col(idCol).as("doc_id"), col("__sig").as("sig"))
+          acceptedSigs.write.mode("append").parquet(sigStoreDir)
+          bandsOf(acceptedSigs, bands, rows).write.mode("append").parquet(bandStoreDir)
+        }
       }
-
-      val accepted = fresh.persist()
-      try {
-        accepted.drop("__sig").write.mode("append").parquet(acceptedPath)
-        val acceptedSigs = accepted.select(col(idCol).as("doc_id"), col("__sig").as("sig"))
-        acceptedSigs.write.mode("append").parquet(sigStoreDir)
-        bandsOf(acceptedSigs, bands, rows).write.mode("append").parquet(bandStoreDir)
-      } finally accepted.unpersist()
-      bandRows.unpersist()
       // store maintenance: the appends above add one file set per
       // batch, so a long-running ingest grows the stores without
       // bound in FILE COUNT even though the bytes stay linear —
@@ -100,7 +97,7 @@ object IncrementalNearDup {
       // the compaction itself is the atomic two-rename swap.
       compactIfNeeded(spark, sigStoreDir, maxStoreFiles, targetFileBytes)
       compactIfNeeded(spark, bandStoreDir, maxStoreFiles, targetFileBytes)
-    } finally sigs.unpersist()
+    }
   }
 
   private def compactIfNeeded(spark: SparkSession, dir: String,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ops.IvfIndex
 import graft.streaming.GtfsRtPipeline.ParquetStateStore
+import graft.util.PlanCache
 
 /** Streaming IVF layout monitor — the continuous twin of C95's batch
   * cell-balance diagnostics: vectors stream in, each batch assigns to
@@ -49,9 +50,7 @@ object IvfBalanceMonitor {
         case Some(prev) => prev.unionByName(batchCounts)
         case None => batchCounts
       }).groupBy(col("cell")).agg(sum(col("n")).as("n"))
-        .persist()
-      store.write(merged, batchId.map(_.toString))
-      merged.unpersist()
+      PlanCache.scoped(merged)(store.write(_, batchId.map(_.toString)))
     }
 
     val current = store.read(spark).get

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ops.{Dedup, TextAnalysis}
 import graft.plans.BloomSketch
+import graft.util.PlanCache
 
 /** Streaming decontamination gate (B15) — the continuous twin of
   * C61's hard decontamination: documents arrive as a stream, the
@@ -51,7 +52,7 @@ object StreamingDecon {
       batch.join(dirty, id === col("__doc_id"), "left_anti")
     }
 
-    def release(): Unit = vocab.unpersist()
+    def release(): Unit = PlanCache.free(vocab)
   }
 
   /** Compile the eval set: distinct 60-bit shingle hashes (persisted

@@ -2,201 +2,164 @@ package graft.util
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped owner of shared persisted intermediates.
+/** The one owner of cached intermediates: every persist, checkpoint
+  * and memo in the operator and query layers takes its lifetime from
+  * one of four forms here, and nothing else releases storage.
   *
-  * Why: ops persist projections they consume more than once (posting
-  * lists, shingle arrays, token streams). The bench harness runs every
-  * query twice (and several queries share fixture projections), so the
-  * same LOGICAL plan gets `.persist()`ed repeatedly — Spark keeps the
-  * first cache entry and logs `CacheManager: Asked to cache already
-  * cached data` for each repeat (the r9 bench tail), and nothing ever
-  * unpersists until session teardown.
+  *  - `df.sharedPersist()` / `df.sharedCheckpoint()` — SESSION
+  *    lifetime, for a frame that escapes the call (the returned lazy
+  *    plan reads it). Registration dedups by (output schema,
+  *    canonicalized analyzed plan): the first caller caches and
+  *    registers the handle, every later caller with an equivalent plan
+  *    gets that FIRST handle back, so repeated bench passes and
+  *    queries sharing fixture projections cache once. [[clear]]
+  *    releases them.
+  *  - [[scoped]] — CALL lifetime, for a frame consumed inside the call
+  *    (eager fits, driver-round loops): cached for `body`, released in
+  *    `finally`, so a throwing operator leaks nothing.
+  *  - [[free]] — ROUND lifetime, for a frame the caller replaces every
+  *    round (k-core peel, CC star rounds, BPE merges) or holds for
+  *    its own owner (a streaming gate).
+  *  - [[memo]] — a session-keyed memo of a pure driver-side result
+  *    (fitted models, checkpointed arms), dropped by [[clear]].
   *
-  * [[persist]] dedups by the CANONICALIZED analyzed plan (the same
-  * semantic identity CacheManager itself uses): the first caller
-  * persists and registers the handle; every later caller with an
-  * equivalent plan gets the FIRST DataFrame back — same cached data,
-  * no re-registration, no warning. [[clear]] unpersists everything for
-  * a session (bench/verify teardown).
+  * Persist vs checkpoint is the caller's choice and is orthogonal to
+  * lifetime. A persisted frame keeps its full build lineage in every
+  * consumer plan; a local checkpoint enters consumers as a one-line
+  * LogicalRDD scan (cheaper to compile), materializes eagerly and has
+  * no lineage to rebuild from — so it suits row-bounded intermediates
+  * (ranked arms, shortlists, model tables). Releasing the two differs
+  * (`Dataset.unpersist` is a no-op on a checkpoint, whose blocks live
+  * on the underlying RDD); [[free]] covers both, so callers never
+  * choose a release call.
   *
-  * Driver state is bounded: one (plan-key → DataFrame handle) entry
-  * per distinct persisted intermediate — plan metadata, never data.
+  * Two guarantees replace per-site guards: [[scoped]] over a plan
+  * that is already cached neither caches nor releases it (CacheManager
+  * uncaches by `sameResult`, so a scoped release would otherwise evict
+  * a shared entry), and [[free]] is a no-op on a registered shared
+  * handle.
+  *
+  * Driver state is bounded: one (plan key → handle) entry per distinct
+  * shared intermediate and one entry per memo key — plan metadata and
+  * model-sized values, never data. Entries of sessions stopped without
+  * a [[clear]] are swept on every registration, and an application-end
+  * listener clears each session as a backstop.
+  *
+  * The per-query plan record is `docs/plan_shapes.tsv`; its walk
+  * expands cached scans into their subtrees, so what a query shares
+  * through this object never changes a recorded shape.
   */
 object PlanCache {
 
-  private val cache =
-    TrieMap.empty[(org.apache.spark.sql.SparkSession, Any), DataFrame]
+  private type Key = (SparkSession, Any)
 
-  /** Persist `df` unless an equivalent plan is already registered —
-    * then return the registered handle. First registration wins: the
-    * `level` of a later equivalent call is intentionally ignored (the
-    * data is already cached at the first caller's level; re-caching
-    * at a different level is exactly the churn this class removes).
-    *
-    * Entries for sessions that were stopped WITHOUT a [[clear]] call
-    * are swept opportunistically on every registration, so a JVM that
-    * cycles sessions (test harnesses, notebooks) cannot grow the map
-    * without bound.
-    */
-  def persist(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    cache.keys.filter(_._1.sparkContext.isStopped).foreach(cache.remove)
-    ensureAutoClear(df.sparkSession)
+  private val shared = TrieMap.empty[Key, DataFrame]
+  private val memos = TrieMap.empty[Key, AnyRef]
+  private val registerLock = new Object
+  private val autoCleared = TrieMap.empty[SparkSession, Unit]
+
+  implicit class Shareable(private val df: DataFrame) extends AnyVal {
+    /** Session-lifetime persist of `df`, deduped by plan. */
+    def sharedPersist(): DataFrame = register(df, checkpoint = false)
+
+    /** Session-lifetime eager local checkpoint of `df`, deduped by
+      * plan; for row-bounded intermediates only.
+      */
+    def sharedCheckpoint(): DataFrame = register(df, checkpoint = true)
+  }
+
+  private def register(df: DataFrame, checkpoint: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    track(spark)
     // the key carries the OUTPUT SCHEMA alongside the canonicalized
     // plan: canonicalization normalizes aliases away, so two plans
     // that differ only in output names (RocCurve's (v, n_pos, n_neg)
     // vs DecisionStump's (v, p, n) histogram) canonicalize EQUAL —
     // returning one for the other breaks downstream name resolution
-    val key = (df.sparkSession,
-      (df.schema, df.queryExecution.analyzed.canonicalized))
-    // fast path lock-free; the slow path serializes registration so
-    // the persist thunk cannot run twice for one key (TrieMap's
-    // getOrElseUpdate may re-evaluate under a concurrent insert —
-    // a benign duplicate-cache warning, but exactly the noise this
-    // class exists to remove)
-    cache.get(key).getOrElse(registerLock.synchronized {
-      cache.getOrElseUpdate(key, {
-        // CacheManager's own lookup is sameResult (alias-insensitive):
-        // if an alias-differing twin is already cached, this plan will
-        // read that cache at execution anyway — persisting again would
-        // only log the "already cached" warning we exist to remove
-        if (df.storageLevel == StorageLevel.NONE) df.persist(level) else df
-      })
+    val key = (spark, (df.schema, df.queryExecution.analyzed.canonicalized))
+    // lock-free fast path; registration itself is serialized so the
+    // cache/checkpoint cannot run twice for one key (TrieMap's
+    // getOrElseUpdate may re-evaluate under a concurrent insert)
+    shared.get(key).getOrElse(registerLock.synchronized {
+      shared.getOrElseUpdate(key,
+        if (checkpoint) df.localCheckpoint(true)
+        // CacheManager matches by sameResult (alias-insensitive): an
+        // alias twin already cached serves this plan too
+        else if (df.storageLevel == StorageLevel.NONE) df.persist()
+        else df)
     })
   }
 
-  /** Like [[persist]] but the shared handle is a LOCAL CHECKPOINT:
-    * the first caller materializes the frame eagerly and every later
-    * call with an equivalent plan gets the SAME checkpointed frame
-    * back. The payoff over persist is compile time, not IO — a
-    * persisted frame still carries its full build lineage into every
-    * consumer plan (analyzer + optimizer + AQE walk it on each
-    * rebuild; the warm-pass floor of the hybrid-arm queries was ~0.8 s
-    * of pure plan compilation over a 194-line cached lineage), while a
-    * checkpointed frame enters consumers as a one-line LogicalRDD
-    * scan.
-    *
-    * Use ONLY for intermediates that are ROW-BOUNDED BY CONSTRUCTION
-    * (ranked arms ≤ k·|queries|, shortlists, model tables): the frame
-    * materializes on first touch, and its blocks are freed on
-    * [[clear]] via the tracked RDD handle.
+  /** Run `body` over `ds` held for the call and release it after,
+    * also when `body` throws. An uncached frame is persisted; a local
+    * checkpoint the caller made is held as it is. A plan that is
+    * already cached is passed through untouched and stays cached.
     */
-  def checkpointShared(df: DataFrame): DataFrame = {
-    cache.keys.filter(_._1.sparkContext.isStopped).foreach(cache.remove)
-    ensureAutoClear(df.sparkSession)
-    val key = (df.sparkSession,
-      (df.schema, df.queryExecution.analyzed.canonicalized))
-    cache.get(key).getOrElse(registerLock.synchronized {
-      cache.getOrElseUpdate(key, {
-        val ck = df.localCheckpoint(true)
-        // track the LogicalRDD's UNDERLYING rdd — queryExecution.toRdd
-        // wraps it in a metrics MapPartitionsRDD that holds no blocks,
-        // so unpersisting the wrapper freed nothing (ADVICE r13): the
-        // checkpointed blocks outlived every clear().
-        ckRdds.put((df.sparkSession, ck),
-          materializedRdd(ck).getOrElse(ck.queryExecution.toRdd))
-        ck
-      })
-    })
+  def scoped[A, T](ds: Dataset[A])(body: Dataset[A] => T): T =
+    if (ds.storageLevel != StorageLevel.NONE) body(ds)
+    else {
+      val held = if (checkpointRdd(ds).isDefined) ds else ds.persist()
+      try body(held) finally free(held)
+    }
+
+  /** Release a round-scoped or owner-held frame's storage, persisted
+    * or checkpointed. A no-op on a registered shared handle, which
+    * only [[clear]] releases.
+    */
+  def free(ds: Dataset[_]): Unit =
+    if (!shared.values.exists(_ eq ds)) release(ds)
+
+  /** The session-keyed memo: `compute` once per (session, key) until
+    * [[clear]] of that session. Values must be pure functions of the
+    * key (recomputation after a clear is bit-exact) and driver-sized;
+    * they may hold shared handles, which the same clear releases.
+    */
+  def memo[T <: AnyRef](spark: SparkSession, key: Any)(compute: => T): T = {
+    track(spark)
+    memos.getOrElseUpdate((spark, key), compute).asInstanceOf[T]
   }
 
-  /** The materialized RDD behind a checkpointed frame (LogicalRDD
-    * root), if any. A localCheckpoint leaves no CacheManager entry,
-    * so `DataFrame.unpersist` is a NO-OP on it — freeing its blocks
-    * before ContextCleaner GC needs the underlying RDD handle.
+  /** Release every shared handle and drop every memo of `spark`. */
+  def clear(spark: SparkSession): Unit = {
+    shared.keys.filter(_._1 eq spark).foreach(k => shared.remove(k).foreach(release))
+    memos.keys.filter(_._1 eq spark).foreach(memos.remove)
+  }
+
+  /** A local checkpoint's blocks live on its LogicalRDD root's
+    * underlying rdd — `queryExecution.toRdd` only wraps it in a
+    * metrics MapPartitionsRDD that holds none.
     */
-  def materializedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+  private def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
+    ds.queryExecution.analyzed match {
+      case lr: LogicalRDD if lr.rdd.getStorageLevel != StorageLevel.NONE => Some(lr.rdd)
       case _ => None
     }
 
-  /** Free a round-scoped frame's storage whether it was persisted
-    * (CacheManager entry) or localCheckpoint'd (block-backed RDD):
-    * the iterative ops (k-core peel, CC star rounds, BPE merges)
-    * replace such frames every round, and an unpersist that silently
-    * no-ops on the checkpointed case accumulates every round's blocks
-    * for the session's lifetime.
-    */
-  def free(df: DataFrame): Unit = {
-    try df.unpersist(blocking = false) catch { case _: Throwable => () }
-    materializedRdd(df).foreach(rdd =>
+  private def release(ds: Dataset[_]): Unit = {
+    try ds.unpersist(blocking = false) catch { case _: Throwable => () }
+    checkpointRdd(ds).foreach(rdd =>
       try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
   }
 
-  private val ckRdds =
-    TrieMap.empty[(org.apache.spark.sql.SparkSession, DataFrame),
-      org.apache.spark.rdd.RDD[_]]
-
-  private val registerLock = new Object
-  private val autoCleared = TrieMap.empty[org.apache.spark.sql.SparkSession, Unit]
-
-  /** One listener per session: on application end, drop that
-    * session's handles so long-lived JVMs that never call [[clear]]
-    * (test harnesses, PlanDump, library callers) cannot pin
-    * DataFrame/SparkSession references past session stop. Explicit
-    * [[clear]] in Bench/Verify remains the deterministic path — the
-    * listener is the backstop.
+  /** Sweep entries of stopped sessions and make sure `spark` is
+    * cleared when its application ends, so JVMs that cycle sessions
+    * (test harnesses, notebooks) cannot pin sessions past stop.
     */
-  private def ensureAutoClear(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!autoCleared.contains(spark)) {
-      autoCleared.putIfAbsent(spark, ()) match {
-        case None =>
-          spark.sparkContext.addSparkListener(
-            new org.apache.spark.scheduler.SparkListener {
-              override def onApplicationEnd(
-                  e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-                clear(spark)
-                autoCleared.remove(spark)
-              }
-            })
-        case Some(_) => () // another thread registered the listener
-      }
-    }
-
-  /** Chainable form: `df.sharedPersist()` — the drop-in replacement
-    * for a `.persist(...)` with no matching unpersist (iterative ops
-    * that unpersist within one call keep the direct API: their
-    * intermediates are round-scoped, not shared).
-    */
-  implicit class Shareable(private val df: DataFrame) extends AnyVal {
-    def sharedPersist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-      PlanCache.persist(df, level)
-
-    /** `df.sharedCheckpoint()` — the bounded-intermediate variant:
-      * see [[PlanCache.checkpointShared]].
-      */
-    def sharedCheckpoint(): DataFrame = PlanCache.checkpointShared(df)
-  }
-
-  /** Hook for OTHER caches holding handles to frames this class
-    * materialized (e.g. a query-layer memo of checkpointed frames):
-    * a [[clear]] frees the underlying blocks, so any such handle
-    * becomes unusable (a local checkpoint has no lineage to rebuild
-    * from) and must be dropped in the same breath.
-    */
-  def onClear(f: org.apache.spark.sql.SparkSession => Unit): Unit =
-    clearListeners.synchronized { clearListeners += f }
-
-  private val clearListeners =
-    scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.SparkSession => Unit]
-
-  /** Unpersist and drop every handle registered for `spark`. */
-  def clear(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mine = cache.keys.filter(_._1 eq spark)
-    mine.foreach { k =>
-      cache.remove(k).foreach(df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    }
-    ckRdds.keys.filter(_._1 eq spark).foreach { k =>
-      ckRdds.remove(k).foreach(rdd =>
-        try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-    }
-    clearListeners.synchronized { clearListeners.toList }
-      .foreach(f => try f(spark) catch { case _: Throwable => () })
+  private def track(spark: SparkSession): Unit = {
+    shared.keys.filter(_._1.sparkContext.isStopped).foreach(shared.remove)
+    memos.keys.filter(_._1.sparkContext.isStopped).foreach(memos.remove)
+    if (autoCleared.putIfAbsent(spark, ()).isEmpty)
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          clear(spark)
+          autoCleared.remove(spark)
+        }
+      })
   }
 }

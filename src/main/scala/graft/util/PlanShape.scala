@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.window.WindowExec
 /** Canonicalized physical-plan SHAPE of a query — the operator counts
   * that decide 100 TB behavior (shuffles, broadcast builds, join
   * strategy, unpartitioned windows) — as a committed, diffable
-  * manifest instead of an 11k-line eyeball pass over PLANS.md.
+  * manifest (`docs/plan_shapes.tsv`) instead of an eyeball pass over a
+  * full plan dump.
   *
   * The walk is CACHE-ORDER-INDEPENDENT: `InMemoryTableScan` nodes are
   * expanded into their cached subtree, so a query measured after a

@@ -67,4 +67,20 @@ class SourceAblationSpec extends AnyFunSuite with SparkTestBase {
     assert(got("noise")._1 == trainCounts("noise"))
     assert(got("poison")._1 == trainCounts("poison"))
   }
+
+  test("a degenerate eval split throws and leaves no cached blocks or plans") {
+    graft.util.PlanCache.clear(spark)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    val plansBefore = org.apache.spark.sql.CacheProbe.cachedPlans(spark)
+    val docs = corpus.toDF("doc_id", "text", "source", "y")
+    // single-class labels: every held-out AUC is undefined
+    val labels = docs.select(col("doc_id"), lit(1).as("y"))
+    val err = intercept[Exception] {
+      SourceAblation.aucDeltas(docs, col("doc_id"), col("text"),
+        col("source"), labels, Dim, epochs = 2, ablate = Seq("sig"))
+    }
+    assert(err.getMessage.contains("degenerate eval split"), err.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore)
+    assert(org.apache.spark.sql.CacheProbe.cachedPlans(spark) == plansBefore)
+  }
 }

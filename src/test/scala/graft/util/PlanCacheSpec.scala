@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.util.PlanCache.Shareable
 
-/** The shared-cache owner's contract: one persist per distinct
+/** The cache-lifetime owner's contract: one persist per distinct
   * (schema, canonicalized plan), alias-twins neither collide nor
-  * re-register, and clear() releases everything for the session.
+  * re-register, clear() releases everything for the session and only
+  * for it, scoped() releases on every exit, and neither scoped() nor
+  * free() can release a shared handle.
   */
 class PlanCacheSpec extends AnyFunSuite with SparkTestBase {
 
@@ -91,5 +93,75 @@ class PlanCacheSpec extends AnyFunSuite with SparkTestBase {
     assert(p.storageLevel != StorageLevel.NONE)
     PlanCache.free(p)
     assert(p.storageLevel == StorageLevel.NONE)
+  }
+
+  private def nCachedPlans: Int = org.apache.spark.sql.CacheProbe.cachedPlans(spark)
+
+  test("scoped() releases a persisted and a checkpointed frame when the body throws") {
+    PlanCache.clear(spark)
+    val rddsBefore = nPersistedRdds
+    val plansBefore = nCachedPlans
+    val df = (1 to 20).map(i => (i.toLong, i % 4L)).toDF("a", "b").filter(col("b") > 0)
+    for ((kind, frame) <- Seq("persisted" -> (() => df), "checkpointed" -> (() => df.localCheckpoint(true)))) {
+      val err = intercept[IllegalStateException] {
+        PlanCache.scoped(frame()) { held =>
+          assert(held.count() == 15)
+          assert(nPersistedRdds > rddsBefore, "the held frame must be materialized")
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(err.getMessage == "boom")
+      assert(nPersistedRdds == rddsBefore, s"$kind frame leaked blocks")
+      assert(nCachedPlans == plansBefore, s"$kind frame left a cached plan")
+    }
+    assert(df.storageLevel == StorageLevel.NONE)
+  }
+
+  test("scoped() over an already-shared plan leaves the shared handle cached") {
+    PlanCache.clear(spark)
+    def build = (1 to 30).map(i => (i.toLong, i % 5L)).toDF("k", "v")
+      .groupBy("v").agg(sum("k").as("s"))
+    val shared = build.sharedPersist()
+    shared.count()
+    // a separately built, equivalent plan: CacheManager matches it to
+    // the shared entry, so releasing it would evict that entry
+    val n = PlanCache.scoped(build)(_.count())
+    assert(n == 5)
+    assert(shared.storageLevel != StorageLevel.NONE, "scoped must not release a shared entry")
+    PlanCache.clear(spark)
+    assert(shared.storageLevel == StorageLevel.NONE)
+  }
+
+  test("free() on a shared handle leaves it cached and readable") {
+    PlanCache.clear(spark)
+    val ck = (1 to 40).map(i => (i.toLong, i * 3L)).toDF("a", "b")
+      .filter(col("a") % 4 === 0).sharedCheckpoint()
+    val p = (1 to 40).map(i => (i.toLong, i * 3L)).toDF("a", "b")
+      .filter(col("a") % 5 === 0).sharedPersist()
+    p.count()
+    val rdds = nPersistedRdds
+    PlanCache.free(ck)
+    PlanCache.free(p)
+    assert(nPersistedRdds == rdds, "free must not drop a shared handle's blocks")
+    assert(p.storageLevel != StorageLevel.NONE)
+    assert(ck.collect().map(_.getLong(0)).sorted.toSeq == (4L to 40L by 4L))
+    assert(p.count() == 8)
+    PlanCache.clear(spark)
+  }
+
+  test("memo() computes once per session; clear() drops only that session's entries") {
+    val other = spark.newSession()
+    var computed = 0
+    def get(s: org.apache.spark.sql.SparkSession, v: String): String =
+      PlanCache.memo(s, ("spec", "k")) { computed += 1; v }
+    assert(get(spark, "a") == "a" && get(other, "b") == "b")
+    assert(get(spark, "x") == "a" && get(other, "x") == "b" && computed == 2)
+    PlanCache.clear(other)
+    assert(get(spark, "x") == "a", "clearing one session must keep the other's memo")
+    assert(get(other, "c") == "c" && computed == 3)
+    PlanCache.clear(spark)
+    assert(get(spark, "d") == "d" && computed == 4)
+    PlanCache.clear(spark)
+    PlanCache.clear(other)
   }
 }

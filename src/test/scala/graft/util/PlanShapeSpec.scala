@@ -12,7 +12,8 @@ import graft.SparkTestBase
   * WindowExec nodes are allowed ONLY for the audited bounded-window
   * queries. A new Exchange, a join that degrades to BNLJ/cartesian,
   * or a window that loses its partitioning now fails `sbt test`
-  * instead of hiding in an 11k-line PLANS.md diff.
+  * instead of hiding in a plan-dump diff. The manifest,
+  * `docs/plan_shapes.tsv`, is the one committed per-query plan record.
   *
   * Intentional plan changes: regenerate with
   * `sbt "runMain graft.PlanShapeDump"` and commit the new manifest.
