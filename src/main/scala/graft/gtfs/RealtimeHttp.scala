@@ -3,6 +3,8 @@ package graft.gtfs
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.util.GraftConfig
@@ -48,7 +50,12 @@ final class RealtimeHttp(app: RealtimeApp, config: GraftConfig, port: Int = 0) {
     if (path.endsWith(".xml")) "application/rss+xml"
     else "application/octet-stream"
 
-  private def handle(exchange: HttpExchange): Unit =
+  /** A route body that throws (a failed Spark job in feed assembly)
+    * answers 500 and logs one stderr line, instead of resetting the
+    * connection with no status.
+    */
+  private def handle(exchange: HttpExchange): Unit = {
+    val path = exchange.getRequestURI.getPath
     try {
       val headers = exchange.getResponseHeaders
       if (corsEnabled) {
@@ -57,18 +64,24 @@ final class RealtimeHttp(app: RealtimeApp, config: GraftConfig, port: Int = 0) {
         headers.set("Access-Control-Allow-Methods", "GET")
         headers.set("Access-Control-Allow-Headers", "*")
       }
-      val path = exchange.getRequestURI.getPath
       if (exchange.getRequestMethod != "GET")
         respond(exchange, 405, "method not allowed".getBytes(StandardCharsets.UTF_8))
       else
         app.routes.get(path) match {
           case Some(body) =>
+            val bytes = body()
             headers.set("Content-Type", contentType(path))
-            respond(exchange, 200, body())
+            respond(exchange, 200, bytes)
           case None =>
             respond(exchange, 404, "not found".getBytes(StandardCharsets.UTF_8))
         }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[graft] realtime GET $path failed: $e")
+        if (exchange.getResponseCode < 0)
+          respond(exchange, 500, "internal server error".getBytes(StandardCharsets.UTF_8))
     } finally exchange.close()
+  }
 
   private def respond(exchange: HttpExchange, status: Int, body: Array[Byte]): Unit = {
     exchange.sendResponseHeaders(status, if (body.isEmpty) -1L else body.length.toLong)

@@ -338,14 +338,12 @@ object Dedup {
     * anchoring are exactly those sharing ONLY boilerplate-frequency
     * shingles, which the boilerplate/dup-span operators own.
     *
-    * Shuffle shape: per-doc distinct hash ARRAYS are built IN-ROW
-    * (`array_distinct(transform(...))`, the SetSimJoin form) so
-    * per-doc dedup costs ZERO shuffle — no corpus-sized distinct of
-    * the exploded stream and no collect_list re-assembly. The only
-    * corpus-wide exchanges left are the df count and the anchored
-    * candidate join, both on fixed-width (hash, id) rows; the exact
-    * verify moves candidate-bounded rows + their two arrays and
-    * intersects in a narrow codegen map. Text never shuffles. Returns
+    * Shuffle shape: per-doc distinct hash arrays are built in-row
+    * ([[Postings.hashSets]]) so per-doc dedup costs zero shuffle; the
+    * anchor stage ([[Postings.anchorPairs]]) is one exchange on
+    * fixed-width (hash, id) rows; the exact verify moves
+    * candidate-bounded rows + their two arrays and intersects in a
+    * narrow codegen map. Text never shuffles. Returns
     * (id_a, id_b, n_common, size_a, size_b, containment) with
     * id_a < id_b, containment >= threshold.
     */
@@ -356,34 +354,10 @@ object Dedup {
       shingleK: Int = 3,
       maxDf: Int = 10,
       threshold: Double = 0.8): DataFrame = {
-    val arrays = df.select(id.cast("bigint").as("doc_id"),
-        array_distinct(transform(TextAnalysis.wordShingles(text, shingleK),
-          sh => md5Hash60(sh))).as("hs"))
-      .sharedPersist()
-    // re-exploding the cached arrays is a scan, not a shuffle; rows
-    // are already distinct per doc by construction
-    val sh = arrays.select(col("doc_id"), explode(col("hs")).as("h"))
-
-    // ONE exchange for the whole anchoring stage: per hash, the exact
-    // df plus a BOUNDED id list (top-maxDf ascending ids — when
-    // df <= maxDf that is ALL of them, and rows with df > maxDf are
-    // dropped anyway, so the shuffle carries at most maxDf ids per
-    // hash regardless of how hot a boilerplate shingle is). Pairs
-    // then expand IN-ROW (<= maxDf²/2 per hash) — no df-count join
-    // and no candidate self-join, the two extra corpus-wide
-    // exchanges the previous shape paid.
-    val cells = sh.groupBy(col("h"))
-      .agg(count(lit(1)).as("df"),
-        graft.plans.TopKAgg.topK(-col("doc_id"), col("doc_id"), maxDf).as("kept"))
-      .filter(col("df") >= 2 && col("df") <= maxDf)
-      .select(transform(col("kept"), e => e.getField("id")).as("ids"))
-    // two chained Generates (posexplode then explode of the tail
-    // slice) stay in codegen; a nested transform/flatten/struct
-    // lambda form walks the interpreted higher-order path per pair
-    val candidates = cells
-      .select(posexplode(col("ids")).as(Seq("i", "id_a")), col("ids"))
-      .select(col("id_a"),
-        explode(slice(col("ids"), col("i") + lit(2), lit(maxDf))).as("id_b"))
+    // per-doc sets: read by the anchor stage and both verify sides
+    val arrays = Postings.hashSets(df, id, text, shingleK).sharedPersist()
+    val candidates = Postings.anchorPairs(
+        arrays.select(col("doc_id"), explode(col("hs")).as("h")), maxDf)
       .distinct()
 
     // pair STATS are threshold-independent — persist them, make the
@@ -392,12 +366,11 @@ object Dedup {
     // instead of re-walking anchor+verify. Bounded by the candidate
     // count (anchor-df-bounded), MEMORY_AND_DISK via sharedPersist.
     val pairStats = candidates
-      .join(arrays.select(col("doc_id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(arrays.select(col("doc_id").as("id_b"), col("hs").as("hs_b")), "id_b")
+      .join(arrays.select(col("doc_id").as("id_a"), col("hs").as("hs_a"), col("sz").as("size_a")), "id_a")
+      .join(arrays.select(col("doc_id").as("id_b"), col("hs").as("hs_b"), col("sz").as("size_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("hs_a"), col("hs_b"))).cast("bigint").as("n_common"),
-        size(col("hs_a")).cast("bigint").as("size_a"),
-        size(col("hs_b")).cast("bigint").as("size_b"))
+        col("size_a"), col("size_b"))
       .withColumn("containment",
         col("n_common").cast("double") / least(col("size_a"), col("size_b")).cast("double"))
       .sharedPersist()

@@ -34,24 +34,10 @@ import org.apache.spark.sql.functions._
   */
 object SetSimJoin {
 
-  /** Per-doc distinct 60-bit shingle-hash ARRAYS: (doc_id, hs, sz).
-    * Hashing happens inside the row (transform + array_distinct over
-    * the already-distinct shingle array) so per-doc dedup costs ZERO
-    * shuffle — the exploded (doc_id, h) stream this used to
-    * `.distinct()` was a corpus-sized exchange, and keeping the
-    * array form also hands the verify stage its sets without a
-    * collect_list re-shuffle.
-    */
-  private def hashArrays(df: DataFrame, id: Column, text: Column, shingleK: Int): DataFrame =
-    df.select(id.cast("bigint").as("doc_id"),
-        array_distinct(transform(TextAnalysis.wordShingles(text, shingleK),
-          sh => Dedup.md5Hash60(sh))).as("hs"))
-      .withColumn("sz", size(col("hs")).cast("bigint"))
-      .sharedPersist()
-
   /** Prefix-filter candidate pairs (post size-filter, pre verify):
     * distinct (id_a < id_b) sharing a rarest-first prefix token with
-    * compatible sizes.
+    * compatible sizes. Not a [[Postings.anchorPairs]] join: prefix
+    * tokens have unbounded df.
     */
   private def candidateStage(docArrays: DataFrame, tauMilli: Int): DataFrame = {
     val sets = docArrays.select(col("doc_id"), explode(col("hs")).as("h"), col("sz"))
@@ -66,10 +52,9 @@ object SetSimJoin {
     // prefix length |S| - ceil(tau·|S|) + 1, exact in integers
     // (the double quotient is exact below 2^53; cast truncates = floor)
     // persisted: BOTH sides of the candidate self-join below read this
-    // frame — unpersisted, the whole df-count + rarest-first window
-    // pipeline ran twice (the before-plan carried two full copies of
-    // the Exchange→HashAggregate→Window chain). Fixed-width
-    // (h, doc_id, sz) rows bounded by the sum of prefix lengths.
+    // frame, which would otherwise run the df-count + rarest-first
+    // window pipeline twice. Fixed-width (h, doc_id, sz) rows bounded
+    // by the sum of prefix lengths.
     val prefix = ranked
       .filter(col("rnk") <= col("sz") - ((col("sz") * tauMilli + 999) / 1000).cast("bigint") + 1)
       .select(col("h"), col("doc_id"), col("sz"))
@@ -95,14 +80,11 @@ object SetSimJoin {
       shingleK: Int = 3,
       tauMilli: Int = 700): DataFrame = {
     require(tauMilli > 0 && tauMilli <= 1000, "tauMilli in (0, 1000]")
-    val docArrays = hashArrays(df, id, text, shingleK)
-    val candidates = candidateStage(docArrays, tauMilli)
-
-    val arrays = docArrays
-
-    candidates
-      .join(arrays.select(col("doc_id").as("id_a"), col("hs").as("hs_a"), col("sz").as("size_a")), "id_a")
-      .join(arrays.select(col("doc_id").as("id_b"), col("hs").as("hs_b"), col("sz").as("size_b")), "id_b")
+    // per-doc sets: read by the candidate stage and both verify sides
+    val docArrays = Postings.hashSets(df, id, text, shingleK).sharedPersist()
+    candidateStage(docArrays, tauMilli)
+      .join(docArrays.select(col("doc_id").as("id_a"), col("hs").as("hs_a"), col("sz").as("size_a")), "id_a")
+      .join(docArrays.select(col("doc_id").as("id_b"), col("hs").as("hs_b"), col("sz").as("size_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("hs_a"), col("hs_b"))).cast("bigint").as("n_common"),
         col("size_a"), col("size_b"))
@@ -124,5 +106,5 @@ object SetSimJoin {
       text: Column,
       shingleK: Int = 3,
       tauMilli: Int = 700): DataFrame =
-    candidateStage(hashArrays(df, id, text, shingleK), tauMilli)
+    candidateStage(Postings.hashSets(df, id, text, shingleK).sharedPersist(), tauMilli)
 }

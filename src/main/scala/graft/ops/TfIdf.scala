@@ -52,14 +52,13 @@ object TfIdf {
     // per-doc shingle-hash ARRAYS (hashing inside the row, the C104
     // device) persisted once; the exploded posting stream derives
     // from them without re-tokenizing, and the array size is the
-    // doc's term count for the norm assembly below
+    // doc's term count for the norm assembly below. Only the hash
+    // kernel is shared with Postings: the dot expansion carries an idf
+    // weight per posting, which the bare-id anchorPairs does not.
     val docArrays = docs
-      .select(id.cast("bigint").as("doc_id"),
-        transform(TextAnalysis.wordShingles(text, shingleK),
-          sh => Dedup.md5Hash60(sh)).as("hs"))
+      .select(id.cast("bigint").as("doc_id"), Postings.hashes(text, shingleK).as("hs"))
       .withColumn("sz", size(col("hs")).cast("bigint"))
       .sharedPersist()
-      
     val postings = docArrays.select(col("doc_id"), explode(col("hs")).as("h"))
     // n_docs as a DRIVER literal (one bounded 1-row fetch off the
     // cached arrays — the model-literal device): both idf sites then
@@ -93,7 +92,6 @@ object TfIdf {
         floor(log(lit((nDocs + 1L).toDouble) /
           (col("df") + lit(1L)).cast("double")) * lit(1000.0)).cast("bigint").as("idf"))
       .sharedPersist()
-
 
     // nsq = (n_df1 × idf1²) + Σ_{df ∈ [2, maxDf]} idf² — identical
     // integers to summing idf² over every df <= maxDf term (df = 1

@@ -89,30 +89,11 @@ object TriangleCount {
       text: Column,
       shingleK: Int = 3,
       maxDf: Int = 10): DataFrame = {
-    // per-doc shingle dedup inside the row (array_distinct over the
-    // hashed shingle array, the SetSimJoin device): the exploded
-    // stream is unique-(doc, h) by construction, so the corpus-wide
-    // (doc_id, h) distinct exchange this used to pay disappears —
-    // the first shuffle is now the df count the rare-filter needs
-    // anyway (guide §2.4: remove shuffles outright).
-    val sets = docs
-      .select(id.cast("bigint").as("doc_id"),
-        explode(array_distinct(transform(
-          TextAnalysis.wordShingles(text, shingleK),
-          sh => Dedup.md5Hash60(sh)))).as("h"))
-      .sharedPersist()
-    val rare = sets.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= maxDf)
-      .select(col("h"))
-    // persisted: both sides of the pair self-join read this frame —
-    // unpersisted, the rare-df groupBy + join ran twice. Bounded by
-    // maxDf rows per rare hash.
-    val anchored = sets.join(rare, "h").sharedPersist()
-    anchored.select(col("h"), col("doc_id").as("src"))
-      .join(anchored.select(col("h"), col("doc_id").as("dst")), "h")
-      .filter(col("src") < col("dst"))
-      .select(col("src"), col("dst"))
+    val postings = Postings.hashSets(docs, id, text, shingleK)
+      .select(col("doc_id"), explode(col("hs")).as("h"))
+    Postings.anchorPairs(postings, maxDf)
       .distinct()
+      .select(col("id_a").as("src"), col("id_b").as("dst"))
   }
 
   /** Global summary: (n_nodes, n_edges, n_triangles, global

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.util.PlanCache.Shareable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -17,9 +16,9 @@ import graft.plans.{SpanHashesExpr, WinnowExpr}
   *
   * Scale shape: hashing and selection are per-row codegen kernels
   * (the C89 span-hash kernel + [[WinnowExpr]]) — text never leaves
-  * its row; only 8-byte fingerprints explode. The pair stage is the
-  * C105 anchor discipline: fingerprints with document frequency in
-  * [2, maxDf] join — hot boilerplate fingerprints (df > maxDf) are
+  * its row; only 8-byte fingerprints explode. The pair stage is
+  * [[Postings.anchorPairs]]: fingerprints with document frequency in
+  * [2, maxDf] pair up — hot boilerplate fingerprints (df > maxDf) are
   * excluded, bounding per-key fan-out at maxDf², and the exact
   * shared-count re-rank runs on candidates only.
   */
@@ -47,18 +46,11 @@ object Winnowing {
       w: Int = 4,
       maxDf: Int = 10,
       minShared: Int = 2): DataFrame = {
-    require(w >= 1 && maxDf >= 2 && minShared >= 1, "w>=1, maxDf>=2, minShared>=1")
-    val fps = fingerprints(df, id, text, k, w).sharedPersist()
-    val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= maxDf)
-      .select(col("fp"))
-    // persisted: both sides of the pair self-join read this frame —
-    // unpersisted, the rare-df groupBy + join ran twice (bounded by
-    // maxDf rows per rare fingerprint)
-    val anchored = fps.join(rare, "fp").sharedPersist()
-    anchored.select(col("fp"), col("doc_id").as("id_a"))
-      .join(anchored.select(col("fp"), col("doc_id").as("id_b")), "fp")
-      .filter(col("id_a") < col("id_b"))
+    require(w >= 1 && minShared >= 1, "w>=1, minShared>=1")
+    // fingerprints are distinct per document, so every anchor pair row
+    // is one distinct shared fingerprint
+    val postings = fingerprints(df, id, text, k, w).select(col("doc_id"), col("fp").as("h"))
+    Postings.anchorPairs(postings, maxDf)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

@@ -128,4 +128,20 @@ class RealtimeHttpSpec extends AnyFunSuite with SparkTestBase {
       assert(calls == 1)
     } finally srv.stop()
   }
+
+  test("a route whose provider throws answers 500 instead of resetting the connection") {
+    val a = new RealtimeApp(
+      GraftConfig.fromYaml("app:\n"),
+      () => throw new IllegalStateException("feed assembly failed"),
+      () => emptyTripUpdates,
+      () => emptyTripUpdates,
+      () => FixedTs * 1000L)
+    val srv = new RealtimeHttp(a, GraftConfig.fromYaml("app:\n")).start()
+    try {
+      val resp = get(srv.boundPort, "/gtfs/realtime/service-alerts.pbf")
+      assert(resp.statusCode() == 500)
+      // the server stays up for the next request
+      assert(get(srv.boundPort, "/nope").statusCode() == 404)
+    } finally srv.stop()
+  }
 }

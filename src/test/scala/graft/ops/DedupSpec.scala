@@ -165,4 +165,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
         shingleK = 3, maxDf = 5, threshold = 0.01)
     assert(rows.count() == 0L)
   }
+
+  test("containment rejects maxDf < 2 instead of returning no pairs") {
+    val docsDf = Seq((1L, "a b c d"), (2L, "a b c d")).toDF("doc_id", "text")
+    intercept[IllegalArgumentException](
+      Dedup.containment(docsDf, col("doc_id"), col("text"), shingleK = 3, maxDf = 1))
+  }
 }

@@ -121,6 +121,12 @@ class Round8bOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(r.getDouble(3) == 1.0)
   }
 
+  test("anchorEdges rejects maxDf < 2 instead of returning no edges") {
+    val docs = Seq((1L, "a b c d"), (2L, "a b c d")).toDF("doc_id", "text")
+    intercept[IllegalArgumentException](
+      TriangleCount.anchorEdges(docs, col("doc_id"), col("text"), shingleK = 3, maxDf = 1))
+  }
+
   // ------------------------------------------------------ RankFusion
 
   test("fuse: doc in both lists outranks docs in one list at the same ranks") {
